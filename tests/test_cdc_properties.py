@@ -145,13 +145,16 @@ def test_streaming_soak_20_batches(spark, tmp_path_factory):
     assert got == _spec_fold(ops)
 
 
-def test_merge_broadcast_equals_window(spark, tmp_path):
-    """The r5 broadcast COW resolver (no target shuffle) must be
-    bit-equivalent to the window fold that DEFINES merge semantics:
-    randomized scenarios — inserts/updates/deletes, late data, ties on
-    (ts, txn), tombstone resurrection attempts, batch-internal
-    duplicate keys — replayed against two tables that differ only in
-    ``broadcast_key_limit`` (0 forces the window path)."""
+@pytest.mark.parametrize(
+    "merge_mode", ["cow", pytest.param("mor", marks=pytest.mark.smoke)])
+def test_merge_broadcast_equals_window(spark, tmp_path, merge_mode):
+    """The resolver's broadcast strategy (no target/base shuffle) must
+    be bit-equivalent to its window strategy: randomized scenarios —
+    inserts/updates/deletes, late data, ties on (ts, txn), tombstone
+    resurrection attempts, batch-internal duplicate keys — replayed
+    against two tables that differ only in ``broadcast_key_limit`` (0
+    forces the window path). COW compares the merge resolves, MOR the
+    read folds over the same delta stacks."""
     import random
 
     import pyspark.sql.functions as F
@@ -169,13 +172,16 @@ def test_merge_broadcast_equals_window(spark, tmp_path):
     def mk(path, limit):
         return ParquetLakeTable(spark, str(path), key_cols=["trans_id"],
                                 partition_col="event",
-                                broadcast_key_limit=limit)
+                                broadcast_key_limit=limit,
+                                merge_mode=merge_mode)
 
     a = mk(tmp_path / "bcast", 500_000)
     # the adaptive fraction rule would route these tiny waves to the
     # window resolver (batch >> 5% of the table); force broadcast so
-    # the equivalence is actually exercised
-    a.BROADCAST_MERGE_MAX_FRACTION = 10.0
+    # the equivalence is actually exercised (a finite cap sent most
+    # MOR reads, whose delta stacks outgrow a one-row base, back to
+    # the window)
+    a.BROADCAST_MERGE_MAX_FRACTION = float("inf")
     b = mk(tmp_path / "window", 0)
 
     def batch(i):

@@ -184,7 +184,7 @@ def test_broadcast_merge_plan_has_no_target_shuffle(spark, tmp_path):
              .withColumn("_op", F.lit("update"))
              .withColumn("_op_timestamp",
                          F.to_timestamp(F.lit("2026-01-01 00:00:00"))))
-    merged = t._merge_resolve_broadcast(batch.persist(), t.read())
+    merged = t._merge_resolve(batch.persist(), t.read(), "broadcast")
     plan = merged._jdf.queryExecution().executedPlan().toString()
     assert len(re.findall(r"SortMergeJoin", plan)) == 0, plan
     assert len(re.findall(r"BroadcastHashJoin", plan)) >= 2, plan

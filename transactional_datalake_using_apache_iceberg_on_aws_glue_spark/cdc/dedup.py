@@ -22,24 +22,16 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from .envelope import OP_TS_COL, PRIMARY_KEY, TXN_COL
-
-_ROW = "_row"
+from ..lake.resolve import resolve_latest
+from .envelope import PRIMARY_KEY
 
 
 def latest_per_key(
     df: DataFrame,
     key_cols: Sequence[str] = (PRIMARY_KEY,),
-    order_cols: Sequence[str] = (OP_TS_COL, TXN_COL),
 ) -> DataFrame:
-    """Keep the newest record per key, ordered by ``order_cols`` desc
-    (timestamp first, then transaction id as tiebreaker)."""
-    w = Window.partitionBy(*key_cols).orderBy(*[F.desc(c) for c in order_cols])
-    return (
-        df.withColumn(_ROW, F.row_number().over(w))
-        .filter(F.col(_ROW) == 1)
-        .drop(_ROW)
-    )
+    """Keep the newest record per key (timestamp first, then
+    transaction id as tiebreaker): the resolver's one-layer call."""
+    return resolve_latest([df], key_cols)

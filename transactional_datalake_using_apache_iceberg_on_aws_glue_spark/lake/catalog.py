@@ -217,7 +217,8 @@ def view_select_sql(table, as_of_version: int | None = None,
         )
 
     # MOR fold: latest layer wins per key under the same (ts, txn,
-    # layer) order _fold uses, so SQL and DataFrame reads are identical
+    # layer) order lake.resolve.resolve_latest uses, so SQL and
+    # DataFrame reads are identical
     keys = ", ".join(_q_ident(k) for k in table.key_cols)
     order = (
         f"{_q_ident(OP_TS_COL)} DESC NULLS LAST, "

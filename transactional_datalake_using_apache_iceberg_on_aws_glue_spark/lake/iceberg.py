@@ -130,7 +130,7 @@ class IcebergLakeTable:
         if self.store_lineage:
             # T4: a matched target row loses only to a strictly-newer
             # image ((ts, txn) lexicographic, NULL target ts = legacy
-            # row that always loses) — ParquetLakeTable._fold's order
+            # row that always loses) — lake.resolve.resolve_latest's order
             newer = (
                 f"(t.{_q(OP_TS_COL)} IS NULL"
                 f" OR s.{_q(OP_TS_COL)} > t.{_q(OP_TS_COL)}"

@@ -26,9 +26,9 @@ judge item). A moved key surfaces in the per-partition tasks as a
 delete on the old side and an insert on the new side; the planner
 hands each task the layer stacks of the OTHER partitions whose stored
 key bounds overlap its own, and the task resolves the key's GLOBAL
-fold winner across them under the engine's exact ``_fold`` order
-(``_op_timestamp`` desc nulls last, ``_txn_id`` desc nulls last,
-global layer seq desc):
+fold winner across them under the engine's exact ``resolve_latest``
+order (``_op_timestamp`` desc nulls last, ``_txn_id`` desc nulls
+last, global layer seq desc):
 
 - OWNERSHIP: only the namespace holding the key's global NEW winner
   emits its change — a late row landing in a non-winner partition
@@ -69,9 +69,9 @@ MOR tables stream LIVE (r5): a version with outstanding deltas is a
 valid offset — each partition task stacks its base files plus every
 delta dir's files for that partition (ordered layer list from the
 manifest's ``delta_files`` entry) and folds latest-per-key in pandas
-under the engine's ``_fold`` order with GLOBAL layer sequence numbers
-(base 0, then the manifest's delta commit order), so the streamed
-state matches ``read_data`` exactly. Mixed partition specs (mid
+under the engine's ``resolve_latest`` order with GLOBAL layer
+sequence numbers (base 0, then the manifest's delta commit order),
+so the streamed state matches ``read_data`` exactly. Mixed partition specs (mid
 ``evolve_partition_spec`` migration) fold per (slice-spec, token)
 NAMESPACE and diff as separate tasks (r6): a manifest carrying slices
 under two specs no longer holds the offset — the move resolution
@@ -363,7 +363,7 @@ class _PartDiff(InputPartition):
     seq 0 the base slice, then one layer per outstanding MOR delta dir
     numbered by its position in the manifest's commit-ordered delta
     list (so lineage ties resolve IDENTICALLY to the engine's global
-    ``_fold``); a COW version is a single-layer stack.
+    ``resolve_latest`` fold); a COW version is a single-layer stack.
 
     ``fill_col`` is the column the partition token belongs to — the
     SLICE's own partition column, which after a partition-spec
@@ -542,8 +542,8 @@ class LakeChangeStreamReader(DataSourceStreamReader):
         spec's tokens separately). Sequence numbers are GLOBAL — base
         0, delta ``i`` at ``i+1`` in manifest commit order — so
         lineage ties across namespaces resolve exactly as the
-        engine's ``_fold`` resolves them. A COW manifest yields
-        single-layer stacks; a token introduced only by a delta gets
+        engine's ``resolve_latest`` resolves them. A COW manifest
+        yields single-layer stacks; a token introduced only by a delta gets
         an empty base layer placeholder."""
         if m is None:
             return {}
@@ -1570,7 +1570,7 @@ class LakeChangeStreamReader(DataSourceStreamReader):
         """{key_tuple: winner record} — each overlapping neighbor's
         per-namespace fold winner (tombstone winners INCLUDED, flagged
         ``_deleted``), reduced to the global winner per key under the
-        engine's ``_fold`` order; global layer seqs make the
+        engine's ``resolve_latest`` order; global layer seqs make the
         cross-namespace tie-break exact. ``keys_only`` prunes the
         parquet read to key+lineage columns (delete suppression needs
         membership+liveness, not images); ``key_filter`` pushes the
@@ -1590,14 +1590,7 @@ class LakeChangeStreamReader(DataSourceStreamReader):
         allrows = pd.concat(frames, ignore_index=True)
         if allrows.empty:
             return {}
-        # normalize lineage dtypes so the cross-namespace sort cannot
-        # trip on all-None object columns from lineage-less layers
-        allrows["_op_timestamp"] = pd.to_datetime(allrows["_op_timestamp"])
-        allrows["_txn_id"] = allrows["_txn_id"].astype("Int64")
-        allrows = (allrows.sort_values(
-            ["_op_timestamp", "_txn_id", "__layer_seq"], ascending=False,
-            na_position="last", kind="stable")
-            .drop_duplicates(subset=self.keys, keep="first"))
+        allrows = _latest_per_key(allrows, self.keys)
         out = {}
         for r in allrows.to_dict(orient="records"):
             k = tuple(_coerce(r[c], dtypes[c], renames, c)
@@ -1608,8 +1601,30 @@ class LakeChangeStreamReader(DataSourceStreamReader):
         return out
 
 
+def _latest_per_key(frame, keys: list):
+    """Latest row per key of a layered pandas frame under the engine's
+    ``resolve_latest`` order (``_op_timestamp`` desc nulls last,
+    ``_txn_id`` desc nulls last, ``__layer_seq`` desc) — pandas
+    ``sort_values(na_position='last')`` reproduces desc-nulls-last per
+    column exactly. Lineage dtypes are normalized first: all-None
+    object columns from lineage-less layers cannot trip the sort, and
+    nullable Int64 txn ids compare exactly (a float64 roundtrip could
+    misorder giant ones)."""
+    import pandas as pd
+
+    if "_op_timestamp" in frame.columns:
+        frame["_op_timestamp"] = pd.to_datetime(frame["_op_timestamp"])
+    if "_txn_id" in frame.columns:
+        frame["_txn_id"] = frame["_txn_id"].astype("Int64")
+    sort_cols = [c for c in ("_op_timestamp", "_txn_id", "__layer_seq")
+                 if c in frame.columns]
+    return (frame.sort_values(sort_cols, ascending=False,
+                              na_position="last", kind="stable")
+            .drop_duplicates(subset=keys, keep="first"))
+
+
 def _win_key(r: dict):
-    """Total order reproducing the engine's ``_fold``
+    """Total order reproducing the engine's ``resolve_latest``
     (``_op_timestamp`` desc nulls last, ``_txn_id`` desc nulls last,
     global layer seq desc) as an ascending sort key: the max element
     is the fold winner. Null lineage sorts below any value."""
@@ -1837,19 +1852,16 @@ def _load_state(path: str, layers: list, columns: list, keys: list,
                 key_filter: dict | None = None):
     """Live rows of one partition slice as pandas. ``layers`` is the
     ordered MOR stack ``[(global_seq, files), ...]``; with more than
-    one non-empty layer the latest image per key wins under the SAME
-    (``_op_timestamp`` desc nulls last, ``_txn_id`` desc nulls last,
-    layer seq desc) order the engine's ``_fold`` uses — pandas
-    ``sort_values(na_position='last')`` reproduces desc-nulls-last per
-    column exactly — so the streamed state is bit-identical to
-    ``read_data``. Then: tombstone winners dropped, columns reindexed
-    to the stream schema (additive evolution -> missing columns become
-    nulls; pre-rename files resolve through the manifest rename
-    history, duplicated from lake.table because this module must stay
-    self-contained for by-value pickling), partition column re-derived
-    from the directory token (hive layout strips it from the files) —
-    unescaped, NULL-token-aware, and parsed into the column's declared
-    type.
+    one non-empty layer the latest image per key wins under the
+    engine's order (``_latest_per_key``), so the streamed state is
+    bit-identical to ``read_data``. Then: tombstone winners dropped,
+    columns reindexed to the stream schema (additive evolution ->
+    missing columns become nulls; pre-rename files resolve through the
+    manifest rename history, duplicated from lake.table because this
+    module must stay self-contained for by-value pickling), partition
+    column re-derived from the directory token (hive layout strips it
+    from the files) — unescaped, NULL-token-aware, and parsed into the
+    column's declared type.
 
     r6 options for the cross-partition move resolution: with
     ``keep_killed=True`` tombstone winners are RETAINED and the
@@ -1910,15 +1922,7 @@ def _load_state(path: str, layers: list, columns: list, keys: list,
         out = pd.DataFrame()
     if (sum(1 for _s, fl in layers if fl) > 1
             and all(k in out.columns for k in keys)):
-        sort_cols = [c for c in ("_op_timestamp", "_txn_id")
-                     if c in out.columns] + ["__layer_seq"]
-        if "_txn_id" in out.columns:
-            # nullable Int64: exact 64-bit compare (a float64 roundtrip
-            # could misorder giant txn ids) with native NA ordering
-            out["_txn_id"] = out["_txn_id"].astype("Int64")
-        out = (out.sort_values(sort_cols, ascending=False,
-                               na_position="last", kind="stable")
-               .drop_duplicates(subset=keys, keep="first"))
+        out = _latest_per_key(out, keys)
     if not keep_killed and "_deleted" in out.columns:
         out = out[~out["_deleted"].fillna(False).astype(bool)]
     if partition_col and partition_col in columns and part != _ALL:
