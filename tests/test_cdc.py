@@ -7,6 +7,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from transactional_datalake_using_apache_iceberg_on_aws_glue_spark.cdc import (
@@ -20,6 +21,7 @@ from transactional_datalake_using_apache_iceberg_on_aws_glue_spark.cdc import fi
 from transactional_datalake_using_apache_iceberg_on_aws_glue_spark.cdc.envelope import (
     CDC_ENVELOPE_SCHEMA,
     OP_COL,
+    TXN_COL,
 )
 from transactional_datalake_using_apache_iceberg_on_aws_glue_spark.lake import ParquetLakeTable
 from transactional_datalake_using_apache_iceberg_on_aws_glue_spark.streaming import (
@@ -77,6 +79,10 @@ def test_dedup_tiebreak_on_txn_id(spark):
     df = flatten_envelope(_envelope_df(spark, [a, b]))
     out = latest_per_key(df).collect()
     assert len(out) == 1 and out[0]["amount"] == 2
+    # the tiebreak is required: a frame without it fails loudly
+    # instead of keeping an arbitrary row per key
+    with pytest.raises(AnalysisException):
+        latest_per_key(df.drop(TXN_COL))
 
 
 def test_split_upserts_deletes(spark):

@@ -293,42 +293,62 @@ def test_insert_values_and_select(spark, runner):
     assert _state(t)[9] == 90
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-@pytest.mark.parametrize("stored", [0, 100])
-def test_insert_duplicate_key_resolves_latest_wins(spark, tmp_path, mode,
-                                                   stored):
+@pytest.mark.parametrize("mode,stored", [
+    ("runner", 3), ("cow", 0), ("mor", 0), ("cow", 100), ("mor", 100)],
+    ids=["runner", "0-cow", "0-mor", "100-cow", "100-mor"])
+def test_insert_duplicate_key_resolves_latest_wins(spark, tmp_path, request,
+                                                   mode, stored):
     """Documented divergence from Iceberg's append-only INSERT: on a
     keyed latest-wins table a re-INSERT of an existing key replaces
-    the row instead of duplicating it, and a statement that repeats a
-    key lands ONE row for it (merge()'s one-row-per-key contract) —
-    into an empty CREATE TABLE'd table (the create write) and into a
-    table 25x the statement (a MOR read of the lone delta then takes
-    the broadcast fold), both merge modes, before and after compact()."""
+    the row instead of duplicating it, and leaves every other row
+    untouched (``runner``: the fixture's unpartitioned table written by
+    create()). A statement that repeats a key lands ONE row for it
+    (merge()'s one-row-per-key contract) — into an empty CREATE
+    TABLE'd table (the create write) and into a table 25x the
+    statement (a MOR read of the lone delta then takes the broadcast
+    fold), both merge modes, before and after compact()."""
+    if mode == "runner":
+        r, t = request.getfixturevalue("runner")
+        r.sql("INSERT INTO demo.cdc_db.retail_trans VALUES (2, 'b', 999)")
+        assert _state(t) == {1: 10, 2: 999, 3: 30}
+        assert t.read_data().count() == 3
+        return
     r = MergeSqlRunner(spark)
     t = r.sql(f"""CREATE TABLE demo.cdc_db.retail_trans (
         trans_id BIGINT, customer_id STRING, amount INT)
         USING lake LOCATION '{tmp_path / "t"}'
         PARTITIONED BY (customer_id)
         TBLPROPERTIES ('key_cols'='trans_id', 'merge_mode'='{mode}')""")
+    want = {k: 10 * k for k in range(1, stored + 1)}
     if stored:
         t.merge(spark.createDataFrame(
-            [(k, "ab"[k % 2], 10 * k) for k in range(1, stored + 1)], ROWS)
+            [(k, "ab"[k % 2], v) for k, v in want.items()], ROWS)
             .withColumn("_op", F.lit("insert")))
 
     def one_row_per_key():
-        got = t.read_data()
-        assert got.count() == stored + 2
-        assert got.select("trans_id").distinct().count() == stored + 2
-        assert _state(t)[1001] in (1, 2) and _state(t)[1002] in (3, 4)
+        got = _state(t)
+        assert t.read_data().count() == len(want) + 2
+        assert {k: v for k, v in got.items() if k in want} == want
+        assert got[1001] in (1, 2) and got[1002] in (3, 4)
+        return got
 
     r.sql("INSERT INTO demo.cdc_db.retail_trans VALUES "
           "(1001, 'a', 1), (1001, 'a', 2), (1002, 'b', 3), (1002, 'b', 4)")
     one_row_per_key()
     t.compact()
     one_row_per_key()
-    r.sql("INSERT INTO demo.cdc_db.retail_trans VALUES (1001, 'a', 999)")
-    assert _state(t)[1001] == 999
-    assert t.read_data().count() == stored + 2
+    # re-INSERT replaces a statement-written row and (when the table
+    # holds any) a stored one; every other row keeps its value
+    values = "(1001, 'a', 999)"
+    if want:
+        values += ", (2, 'a', 999)"
+        want[2] = 999
+    want[1001] = 999
+    r.sql(f"INSERT INTO demo.cdc_db.retail_trans VALUES {values}")
+    got = _state(t)
+    assert t.read_data().count() == len(want) + 1
+    assert got[1002] in (3, 4)
+    assert {k: v for k, v in got.items() if k != 1002} == want
 
 
 def test_insert_strict_mode_rejects_duplicates(spark, tmp_path):

@@ -68,6 +68,46 @@ def test_cdc_merge_plans_single_window_shuffle(spark, tmp_path):
     assert P.shuffle_count(deduped) == 1
 
 
+def test_mor_append_folds_a_batch_once(spark, tmp_path, monkeypatch):
+    """merge() folds a batch before a MOR append (the batch may repeat
+    a key), but a latest_per_key output is one row per key already:
+    its delta write carries that one window, not a second. A frame
+    derived from it is folded again."""
+    import pyspark.sql.functions as F
+
+    from transactional_datalake_using_apache_iceberg_on_aws_glue_spark.cdc import (
+        latest_per_key,
+    )
+    from transactional_datalake_using_apache_iceberg_on_aws_glue_spark.lake import (
+        ParquetLakeTable,
+    )
+
+    plans = []
+    write = ParquetLakeTable._write_files
+
+    def capture(self, df, dirname):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return write(self, df, dirname)
+
+    monkeypatch.setattr(ParquetLakeTable, "_write_files", capture)
+    R = "trans_id long, event string, amount int, _txn_id long"
+    t = ParquetLakeTable(spark, str(tmp_path / "ma"), key_cols=["trans_id"],
+                         partition_col=None, merge_mode="mor")
+    t.create(spark.createDataFrame([(k, "a", k, 0) for k in range(50)], R))
+    deduped = latest_per_key(
+        spark.createDataFrame([(1, "a", 10, 1), (1, "a", 11, 2),
+                               (2, "b", 20, 3)], R)
+        .withColumn("_op", F.lit("update"))
+        .withColumn("_op_timestamp", F.current_timestamp()),
+        key_cols=["trans_id"])
+    t.merge(deduped)
+    assert plans[-1].count("Window [row_number()") == 1, plans[-1]
+    t.merge(deduped.filter(F.col("trans_id") > 0))
+    assert plans[-1].count("Window [row_number()") == 2, plans[-1]
+    assert {r["trans_id"]: r["amount"] for r in t.read_data().collect()
+            if r["trans_id"] < 3} == {0: 0, 1: 11, 2: 20}
+
+
 def test_wholestage_codegen_active(spark, sf_dir):
     df = _q("q1_pricing_summary", spark, sf_dir)
     assert P.wholestage_codegen_spans(df) >= 1

@@ -25,7 +25,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 
 from ..lake.resolve import resolve_latest
-from .envelope import PRIMARY_KEY
+from .envelope import OP_TS_COL, PRIMARY_KEY, TXN_COL
 
 
 def latest_per_key(
@@ -33,5 +33,8 @@ def latest_per_key(
     key_cols: Sequence[str] = (PRIMARY_KEY,),
 ) -> DataFrame:
     """Keep the newest record per key (timestamp first, then
-    transaction id as tiebreaker): the resolver's one-layer call."""
+    transaction id as tiebreaker): the resolver's one-layer call.
+    A CDC frame carries both lineage columns; one missing raises
+    AnalysisException here rather than ordering by the other alone."""
+    df.select(OP_TS_COL, TXN_COL)
     return resolve_latest([df], key_cols)

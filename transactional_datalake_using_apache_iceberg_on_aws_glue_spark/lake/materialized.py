@@ -321,7 +321,9 @@ class MaterializedRollup:
         # rebuild — verify the lock is still ours before side effects
         self._assert_lock_owned()
         if n_env:
-            self.target.merge(env, batch_rows=n_env)
+            # GROUP BY output plus the stored groups it lacks: one
+            # row per key, so merge skips the batch dedup
+            self.target._merge(env, batch_rows=n_env, one_per_key=True)
         if head > self.feed.position():
             self.feed.commit(head)
         self._clear_intent()
@@ -789,7 +791,9 @@ class MaterializedRollup:
         # this maintainer stalled long enough for its lock to be
         # stolen, abort HERE, before the first side effect
         self._assert_lock_owned()
-        self.target.merge(env, batch_rows=n_env)
+        # one row per group (a per-group delta left-joined to the
+        # one-row-per-group state): merge skips the batch dedup
+        self.target._merge(env, batch_rows=n_env, one_per_key=True)
         self.feed.commit(head)
         self._clear_intent()
 

@@ -1262,7 +1262,9 @@ class MergeSqlRunner:
         cond = self._where_expr(m.group("where"), m.group("alias"))
         data = self._dml_state(table)
         batch = data.filter(cond) if cond is not None else data
-        table.merge(batch.withColumn(OP_COL, F.lit("delete")))
+        # a folded read is one row per key: merge skips the batch dedup
+        table._merge(batch.withColumn(OP_COL, F.lit("delete")),
+                     one_per_key=True)
 
     def _run_update(self, statement: str) -> None:
         """``UPDATE t SET c = expr [, ...] WHERE ...`` — scans matching
@@ -1310,7 +1312,8 @@ class MergeSqlRunner:
         batch = matched.select(
             *[new_cols.get(c, F.col(c)) for c in data.columns]
         )
-        table.merge(batch.withColumn(OP_COL, F.lit("upsert")))
+        table._merge(batch.withColumn(OP_COL, F.lit("upsert")),
+                     one_per_key=True)
 
     def _run_insert(self, statement: str) -> None:
         """``INSERT INTO t [(cols)] VALUES ... | SELECT ...`` — the
@@ -1524,8 +1527,9 @@ class MergeSqlRunner:
             raise MergeSqlError(
                 "unsupported TRUNCATE; expected TRUNCATE TABLE <t>")
         table = self._resolve(m.group("target"))
-        table.merge(self._dml_state(table)
-                    .withColumn(OP_COL, F.lit("delete")))
+        table._merge(self._dml_state(table)
+                     .withColumn(OP_COL, F.lit("delete")),
+                     one_per_key=True)
 
     def _reject_batch_duplicates(self, table: ParquetLakeTable,
                                  batch: DataFrame) -> None:

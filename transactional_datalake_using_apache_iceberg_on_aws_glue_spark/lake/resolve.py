@@ -5,8 +5,10 @@ dedup-latest-per-key + MERGE INTO, spark_sql_merge_into_iceberg.py:105-136).
 Order: ``_op_timestamp`` desc nulls last, then ``_txn_id`` desc nulls
 last, then the later layer wins. Layers are ordered oldest first and
 carry both lineage columns (a NULL ranks below any value; only a lone
-layer may lack them). Tombstone winners (``_deleted``) are KEPT:
-readers drop them.
+layer may lack them — a hand-built merge batch — and then orders by
+what it has, or keeps an arbitrary row per key with neither;
+``latest_per_key`` requires both). Tombstone winners (``_deleted``)
+are KEPT: readers drop them.
 
 Two strategies compute identical rows; the caller's gate picks one by
 size (equivalence: test_merge_broadcast_equals_window, both modes):
@@ -36,6 +38,7 @@ from ..constants import OP_TS_COL, TXN_COL
 
 _ROW = "_rn"
 _SEQ = "_commit_seq"
+_FOLDED = "_folded_keys"
 
 
 def resolve_latest(layers: Sequence[DataFrame], keys: Sequence[str], *,
@@ -47,11 +50,21 @@ def resolve_latest(layers: Sequence[DataFrame], keys: Sequence[str], *,
     (additive schema evolution: a column a layer lacks reads NULL)."""
     keys = list(keys)
     if strategy == "window" or len(layers) == 1:
-        return _window(layers, keys, allow_missing_columns)
+        out = _window(layers, keys, allow_missing_columns)
+        out.__dict__[_FOLDED] = tuple(keys)
+        return out
     base, *tops = layers
     top = (tops[0] if len(tops) == 1
            else _window(tops, keys, allow_missing_columns))
     return _broadcast(base, top, keys, allow_missing_columns)
+
+
+def is_folded(df: DataFrame, keys: Sequence[str]) -> bool:
+    """True when ``df`` is itself a window-strategy output on ``keys``,
+    so one row per key by construction. The mark lives on the Python
+    object: ``persist()`` returns the same object and keeps it, any
+    transformation returns a new, unmarked one."""
+    return vars(df).get(_FOLDED) == tuple(keys)
 
 
 def _beats(ts: Column, other_ts: Column, tx: Column,

@@ -72,7 +72,7 @@ from pyspark.sql import types as T
 
 from ..constants import OP_COL, OP_TS_COL, TXN_COL
 from .fsio import LocalFileSystem
-from .resolve import resolve_latest
+from .resolve import is_folded, resolve_latest
 from .scan import (
     encode_predicate,
     encode_stat_value,
@@ -3230,27 +3230,39 @@ class ParquetLakeTable:
         own materializing action) — the broadcast gates then launch no
         counting job at all. Never an estimate: the gates size a driver
         broadcast with it."""
+        self._merge(batch, commit_retries, batch_rows,
+                    one_per_key=is_folded(batch, self.key_cols))
+
+    def _merge(self, batch: DataFrame, commit_retries: int = 4,
+               batch_rows: int | None = None, *,
+               one_per_key: bool = False) -> None:
+        """``merge`` for in-package callers. ``one_per_key``: the batch
+        holds one row per key by construction (a ``latest_per_key``
+        output, a folded read of this table, a GROUP BY on its keys),
+        so the create and MOR paths skip the batch dedup: the shuffle
+        it costs a batch that is not key-clustered, and the window
+        pass it costs one that is."""
         last: CommitConflictError | None = None
         for _ in range(commit_retries + 1):
             try:
                 self._sync_spec()  # write under the table's CURRENT spec
-                return self._merge_once(batch, known_rows=batch_rows)
+                return self._merge_once(batch, known_rows=batch_rows,
+                                        one_per_key=one_per_key)
             except CommitConflictError as e:
                 last = e
         raise last
 
     def _merge_once(self, batch: DataFrame,
-                    known_rows: int | None = None) -> None:
+                    known_rows: int | None = None,
+                    one_per_key: bool = False) -> None:
         batch = self._with_partition(batch)  # hidden-transform column
         exists = self.exists()
-        if not exists or self.merge_mode == "mor":
+        if not one_per_key and (not exists or self.merge_mode == "mor"):
             # merge()'s input contract is one row per key, but SQL
             # INSERT VALUES and hand-built frames may repeat one: the
             # create and MOR paths write the batch as-is (a MOR read's
             # broadcast fold takes a lone delta as deduped), so they
             # resolve it here; the COW resolve does in _merge_resolve.
-            # A latest_per_key batch is already clustered and sorted on
-            # this order, so it gains no exchange.
             batch = resolve_latest([batch], self.key_cols)
         if not exists:
             m0 = self._manifest()
