@@ -154,6 +154,7 @@ def test_insert_only_ignores_matched(spark, runner):
     assert _state(t) == {1: 10, 2: 20, 3: 30, 7: 70}
 
 
+@pytest.mark.smoke
 def test_asymmetric_conditions_route_by_matched_state(spark, runner):
     """UPDATE and INSERT with different conditions: each source row
     goes to the clause its real matched-state selects."""
@@ -176,14 +177,17 @@ def test_asymmetric_conditions_route_by_matched_state(spark, runner):
 def test_rejects_invalid_clause_kind(spark, runner):
     r, t = runner
     spark.createDataFrame([(1, "a", 1)], ROWS).createOrReplaceTempView("srcx")
-    with pytest.raises(MergeSqlError, match="not valid MERGE"):
+    # Spark's MERGE grammar rejects these clause forms at parse time
+    with pytest.raises(MergeSqlError, match="unsupported MERGE"):
         r.sql("MERGE INTO demo.cdc_db.retail_trans t USING srcx s "
               "ON s.trans_id = t.trans_id "
               "WHEN NOT MATCHED THEN UPDATE SET *")
-    with pytest.raises(MergeSqlError, match="not valid MERGE"):
+    assert _state(t) == {1: 10, 2: 20, 3: 30}
+    with pytest.raises(MergeSqlError, match="unsupported MERGE"):
         r.sql("MERGE INTO demo.cdc_db.retail_trans t USING srcx s "
               "ON s.trans_id = t.trans_id "
               "WHEN MATCHED THEN INSERT *")
+    assert _state(t) == {1: 10, 2: 20, 3: 30}
 
 
 def test_not_matched_by_source_delete_full_sync(spark, runner):
@@ -218,14 +222,17 @@ def test_by_source_delete_alone(spark, runner):
 def test_by_source_guards(spark, runner):
     r, t = runner
     spark.createDataFrame([(1, "a", 1)], ROWS).createOrReplaceTempView("gsrc")
-    with pytest.raises(MergeSqlError, match="MATCHED BY SOURCE is not valid"):
+    # Spark's MERGE grammar rejects these two clause forms at parse time
+    with pytest.raises(MergeSqlError, match="unsupported MERGE"):
         r.sql("MERGE INTO demo.cdc_db.retail_trans t USING gsrc s "
               "ON s.trans_id = t.trans_id "
               "WHEN MATCHED BY SOURCE THEN DELETE")
-    with pytest.raises(MergeSqlError, match="DELETE only"):
+    assert _state(t) == {1: 10, 2: 20, 3: 30}
+    with pytest.raises(MergeSqlError, match="unsupported MERGE"):
         r.sql("MERGE INTO demo.cdc_db.retail_trans t USING gsrc s "
               "ON s.trans_id = t.trans_id "
               "WHEN NOT MATCHED BY SOURCE THEN INSERT *")
+    assert _state(t) == {1: 10, 2: 20, 3: 30}
     with pytest.raises(MergeSqlError, match="target columns"):
         r.sql("MERGE INTO demo.cdc_db.retail_trans t USING gsrc s "
               "ON s.trans_id = t.trans_id "
@@ -772,9 +779,11 @@ def test_dml_on_mor_cdc_table(spark, tmp_path):
     assert _state(t) == {1: 77}
 
 
+@pytest.mark.smoke
 def test_alias_never_rewrites_string_literals(spark, tmp_path):
-    """Alias stripping is quote-aware: alias ``t`` must not corrupt
-    'http://t.co' into 'http://co' (advisor finding r4)."""
+    """Aliases never touch literals: alias ``t`` must not corrupt
+    'http://t.co' into 'http://co' (advisor finding r4), in single or
+    double quotes, and a keyword inside a literal is data."""
     t = ParquetLakeTable(spark, str(tmp_path / "u"), key_cols=["trans_id"],
                          partition_col=None)
     t.create(spark.createDataFrame(
@@ -796,6 +805,29 @@ def test_alias_never_rewrites_string_literals(spark, tmp_path):
         WHEN MATCHED AND s.customer_id = 't.co' THEN UPDATE SET *
         WHEN NOT MATCHED AND s.customer_id = 't.co' THEN INSERT *""")
     assert _state(t) == {2: 20, 3: 30}
+
+    def rows():
+        return {x["trans_id"]: (x["customer_id"], x["amount"])
+                for x in t.read_data().collect()}
+
+    # double-quoted literals are data too, in WHERE and in SET
+    r.sql("INSERT INTO t VALUES (4, 'b', 40), (5, 'y', 50)")
+    r.sql('DELETE FROM t AS t WHERE t.customer_id = "t.b" OR t.trans_id = 5')
+    assert rows() == {2: ("see t.co docs", 20), 3: ("t.co", 30),
+                      4: ("b", 40)}
+    r.sql('UPDATE t AS t SET customer_id = "http://t.co" WHERE t.trans_id = 4')
+    assert rows() == {2: ("see t.co docs", 20), 3: ("t.co", 30),
+                      4: ("http://t.co", 40)}
+    # a keyword inside a literal is not a clause boundary
+    r.sql("UPDATE t SET customer_id = 'x WHERE y' WHERE trans_id = 2")
+    assert rows() == {2: ("x WHERE y", 20), 3: ("t.co", 30),
+                      4: ("http://t.co", 40)}
+    spark.createDataFrame([(6, "x THEN DELETE", 60), (7, "z", 70)], ROWS
+                          ).createOrReplaceTempView("kw_src")
+    r.sql("""MERGE INTO t t USING kw_src s ON s.trans_id = t.trans_id
+        WHEN NOT MATCHED AND s.customer_id = 'x THEN DELETE' THEN INSERT *""")
+    assert rows() == {2: ("x WHERE y", 20), 3: ("t.co", 30),
+                      4: ("http://t.co", 40), 6: ("x THEN DELETE", 60)}
 
 
 def test_sql_frontend_random_soak(spark, tmp_path):
@@ -1242,6 +1274,7 @@ def _amounts(df):
     return {r["trans_id"]: r["amount"] for r in df.collect()}
 
 
+@pytest.mark.smoke
 def test_select_time_travel_version_and_timestamp(spark, runner):
     """`[FOR] VERSION AS OF` / `[FOR] TIMESTAMP AS OF` resolve through
     the manifest: Athena runs exactly this syntax against the
@@ -1539,6 +1572,7 @@ def test_insert_select_can_time_travel(spark, runner):
     assert _state(t) == {1: 10, 2: 20, 3: 30}
 
 
+@pytest.mark.smoke
 def test_merge_using_subquery_source(spark, runner):
     """MERGE USING (SELECT ...) s — the subquery evaluates through
     query(), so it composes with time travel: restoring a prior
@@ -1581,6 +1615,7 @@ def test_merge_using_subquery_source(spark, runner):
               "WHEN MATCHED THEN DELETE")
 
 
+@pytest.mark.smoke
 def test_select_metadata_tables(spark, runner):
     """Iceberg metadata-table addressing in SQL: t.history /
     t.snapshots / t.refs / t.files / t.partitions, the last two with
@@ -1620,12 +1655,12 @@ def test_select_metadata_tables(spark, runner):
     assert not isinstance(ei.value, MergeSqlError)
 
 
+@pytest.mark.smoke
 def test_query_rewrites_are_literal_and_context_safe(spark, runner):
-    """reviewer findings (r10, second wave): the textual rewrites scan
-    a literal-masked twin of the statement, so string literals that
-    mention a registered table plus VERSION AS OF / .files are DATA;
-    and metadata refs require FROM/JOIN context, so a qualified
-    column named like a metadata kind is never hijacked."""
+    """reviewer findings (r10, second wave): only relations are
+    rewritten, so string literals and comments that mention a
+    registered table plus VERSION AS OF / .files are DATA, and a
+    qualified column named like a metadata kind is never hijacked."""
     r, t = runner
     lit = "demo.cdc_db.retail_trans VERSION AS OF 3"
     row = r.query(f"SELECT '{lit}' AS note").collect()[0]
@@ -1633,6 +1668,14 @@ def test_query_rewrites_are_literal_and_context_safe(spark, runner):
     lit2 = "demo.cdc_db.retail_trans.files"
     row2 = r.query(f"SELECT '{lit2}' AS note").collect()[0]
     assert row2["note"] == lit2
+    # ... and so are comments, line and block (version 99 does not
+    # exist: pinning it would raise)
+    gone = "demo.cdc_db.retail_trans VERSION AS OF 99"
+    sel = "SELECT trans_id, amount FROM demo.cdc_db.retail_trans"
+    assert _amounts(r.query(f"{sel} -- {gone}\n")) == {1: 10, 2: 20, 3: 30}
+    assert _amounts(r.query(
+        f"SELECT /* {gone} */ trans_id, amount "
+        "FROM demo.cdc_db.retail_trans")) == {1: 10, 2: 20, 3: 30}
     # a table whose COLUMN is named 'history', registered under a
     # single-part name: the select-list qualified ref must survive
     h = ParquetLakeTable(spark, str(spark.conf.get("spark.local.dir",
@@ -1703,6 +1746,7 @@ def test_metadata_tables_quoted_ref_pin(spark, runner):
 # -- r11: CTE precedence, FROM-list commas, CTAS, SHOW/DESCRIBE ----------
 
 
+@pytest.mark.smoke
 def test_cte_shadows_registered_table(spark, runner):
     """r10 judge finding (confirmed repro): a WITH-clause alias that
     collides with a registered single-part name must resolve to the
@@ -1725,6 +1769,7 @@ def test_cte_shadows_registered_table(spark, runner):
     assert got[0]["s"] == 3
 
 
+@pytest.mark.smoke
 def test_cte_two_part_registered_name_still_pins(spark, runner):
     """A CTE named after a TWO-part registered name's last segment
     exempts only the single-part spelling: the qualified reference
@@ -1754,6 +1799,7 @@ def test_cte_shadow_applies_to_asof_and_meta_rewrites(spark, runner):
     assert not isinstance(ei.value, MergeSqlError)
 
 
+@pytest.mark.smoke
 def test_from_list_comma_refs_rewrite(spark, runner):
     """r11 judge item #5: metadata and plain refs in legacy
     comma-separated FROM lists rewrite correctly."""
@@ -1813,6 +1859,7 @@ def test_timestamp_as_of_bare_seconds(spark, runner):
         r.query(f"{sel} TIMESTAMP AS OF {ms // 1000 - 60}")
 
 
+@pytest.mark.smoke
 def test_keyword_named_alias_after_time_travel(spark, runner):
     """r10 advisor: 'window'/'sort'/'group' are legal bare aliases in
     Spark; only a matching grammatical continuation makes them

@@ -231,6 +231,17 @@ spark.stop()
 """
 
 
+def _worker_env() -> dict:
+    """Environment of the spawned Spark processes: the repo importable,
+    no inherited CPU pin (each worker pins local[2] itself), and a 2g
+    driver heap unless the caller set one — at the session's 48g
+    default, the test JVM plus three workers overcommit a 15 GB host."""
+    env = {**os.environ, "PYTHONPATH": REPO}
+    env.pop("SPARK_GRAFT_CPUS", None)
+    env.setdefault("SPARK_GRAFT_DRIVER_MEM", "2g")
+    return env
+
+
 def _gen_ops(rng, n_workers, n_waves, rows_per_wave):
     """Per-worker wave lists + the order-independent serial fold.
 
@@ -277,8 +288,7 @@ def test_cross_process_commit_race_soak(spark, tmp_path, seed):
     worker_py.write_text(_WORKER)
 
     procs, stats_files = [], []
-    env = {**os.environ, "PYTHONPATH": REPO}
-    env.pop("SPARK_GRAFT_CPUS", None)  # worker pins local[2] itself
+    env = _worker_env()
     for w in range(n_workers):
         wf = tmp_path / f"waves_{w}.json"
         wf.write_text(json.dumps(waves[w]))
@@ -373,8 +383,7 @@ def test_live_stream_reads_through_cross_process_race(spark, tmp_path, seed):
     worker_py = tmp_path / "worker.py"
     worker_py.write_text(_WORKER)
 
-    env = {**os.environ, "PYTHONPATH": REPO}
-    env.pop("SPARK_GRAFT_CPUS", None)
+    env = _worker_env()
     procs, stats_files = [], []
     for w in range(n_workers):
         wf = tmp_path / f"waves_{w}.json"
@@ -473,8 +482,7 @@ def test_cross_process_mor_writers_vs_compactor_soak(spark, tmp_path, seed):
     compactor_py = tmp_path / "compactor.py"
     compactor_py.write_text(_COMPACTOR)
 
-    env = {**os.environ, "PYTHONPATH": REPO}
-    env.pop("SPARK_GRAFT_CPUS", None)
+    env = _worker_env()
     procs, stats_files = [], []
     for w in range(n_workers):
         wf = tmp_path / f"waves_{w}.json"
@@ -574,8 +582,7 @@ def test_cross_process_gc_vs_writers_soak(spark, tmp_path, seed):
     gc_py = tmp_path / "gc.py"
     gc_py.write_text(_GC)
 
-    env = {**os.environ, "PYTHONPATH": REPO}
-    env.pop("SPARK_GRAFT_CPUS", None)
+    env = _worker_env()
     procs, stats_files = [], []
     for w in range(n_workers):
         wf = tmp_path / f"waves_{w}.json"
@@ -840,8 +847,7 @@ def test_cross_process_streaming_ivm_vs_polling_soak(spark, tmp_path, seed):
     ck_path = str(tmp_path / "sivm_ck")
     go_file = str(tmp_path / "GO")
     stop_file = str(tmp_path / "STOP")
-    env = {**os.environ, "PYTHONPATH": REPO}
-    env.pop("SPARK_GRAFT_CPUS", None)
+    env = _worker_env()
 
     writer_py = tmp_path / "writer.py"
     writer_py.write_text(_SRC_WRITER)
@@ -939,8 +945,7 @@ def test_cross_process_ivm_maintainers_race_soak(spark, tmp_path, seed):
     ck_path = str(tmp_path / "ivm_ck")
     go_file = str(tmp_path / "GO")
     stop_file = str(tmp_path / "STOP")
-    env = {**os.environ, "PYTHONPATH": REPO}
-    env.pop("SPARK_GRAFT_CPUS", None)
+    env = _worker_env()
 
     writer_py = tmp_path / "writer.py"
     writer_py.write_text(_SRC_WRITER)

@@ -15,9 +15,16 @@ Plain Spark cannot execute MERGE INTO against parquet — the statement
 needs a row-level-operation-capable catalog (the Iceberg jar this
 image lacks; ``lake/iceberg.py`` covers the jar-equipped deployment).
 This module closes the gap for the manual engine: ``MergeSqlRunner``
-parses exactly this statement family and routes it to
-``ParquetLakeTable.merge``, so a reference user's MERGE SQL runs
-verbatim, jar or no jar.
+routes exactly this statement family to ``ParquetLakeTable.merge``, so
+a reference user's MERGE SQL runs verbatim, jar or no jar.
+
+Queries and DML are parsed by Spark's own SQL parser
+(``sessionState().sqlParser().parsePlan``). The runner reads each part
+of a statement from the unresolved tree, and an expression's text is
+its node's source span (``origin().startIndex/stopIndex``) sliced from
+the statement, so literals and comments are never taken for structure.
+The DDL and maintenance statements (Athena-order CREATE TABLE, CTAS,
+ALTER, SHOW/DESCRIBE, CALL, MV and database DDL) keep keyword handlers.
 
 Supported grammar (a deliberate, validated subset — anything else
 raises with a pointer to what IS supported)::
@@ -167,58 +174,21 @@ executable with no jar.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import re
 
+from py4j.java_gateway import is_instance_of
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import ParseException
+from pyspark.errors.exceptions.captured import convert_exception
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..constants import OP_COL, OP_TS_COL
 from .table import DELETED_COL, ParquetLakeTable
 
-_MERGE_RE = re.compile(
-    r"^\s*MERGE\s+INTO\s+(?P<target>[\w.`]+)\s+(?:AS\s+)?(?P<talias>\w+)\s+"
-    r"USING\s+(?P<source>[\w.`]+)\s+(?:AS\s+)?(?P<salias>\w+)\s+"
-    r"ON\s+(?P<on>.+?)\s*(?P<clauses>WHEN\s+.+)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_CLAUSE_RE = re.compile(
-    r"WHEN\s+(?P<not>NOT\s+)?MATCHED\s*(?P<by>BY\s+(?:SOURCE|TARGET)\s*)?"
-    r"(?:AND\s+(?P<cond>.+?))?\s*THEN\s+"
-    r"(?P<action>DELETE|UPDATE\s+SET\s+\*|INSERT\s+\*)",
-    re.IGNORECASE | re.DOTALL,
-)
-_DELETE_RE = re.compile(
-    r"^\s*DELETE\s+FROM\s+(?P<target>[\w.`]+)"
-    r"(?:\s+(?:AS\s+)?(?P<alias>(?!WHERE\b)\w+))?"
-    r"(?:\s+WHERE\s+(?P<where>.+?))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_UPDATE_RE = re.compile(
-    r"^\s*UPDATE\s+(?P<target>[\w.`]+)"
-    r"(?:\s+(?:AS\s+)?(?P<alias>(?!SET\b)\w+))?"
-    r"\s+SET\s+(?P<set>.+?)"
-    r"(?:\s+WHERE\s+(?P<where>.+?))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_INSERT_RE = re.compile(
-    r"^\s*INSERT\s+INTO\s+(?P<target>[\w.`]+)"
-    r"(?:\s*\((?P<cols>[^)]*)\))?"
-    r"\s+(?P<src>(?:VALUES|SELECT)\b.+?)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_INSERT_OVERWRITE_RE = re.compile(
-    r"^\s*INSERT\s+OVERWRITE\s+(?:TABLE\s+)?(?P<target>[\w.`]+)"
-    r"(?:\s+PARTITION\s*\((?P<part>[^)]*)\))?"
-    r"(?:\s*\((?P<cols>[^)]*)\))?"
-    r"\s+(?P<src>(?:VALUES|SELECT)\b.+?)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_TRUNCATE_RE = re.compile(
-    r"^\s*TRUNCATE\s+TABLE\s+(?P<target>[\w.`]+)\s*;?\s*$",
-    re.IGNORECASE,
-)
 # CTAS (r11): CREATE TABLE ... USING lake LOCATION '...' AS SELECT —
 # no column list (the schema IS the query's), source may be any
 # SELECT/WITH the read surface accepts (time travel composes)
@@ -232,258 +202,73 @@ _CTAS_RE = re.compile(
     r"\s+AS\s+(?P<src>(?:SELECT|WITH)\b.+?)\s*;?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
-# time-travel clause in a SELECT: `<table> [FOR] VERSION AS OF 3`,
-# `<table> [FOR] TIMESTAMP AS OF <ts>` — both the Spark/Iceberg
-# spelling (no FOR) and the Athena/SQL-standard spelling (FOR, plus
-# the SYSTEM_VERSION / SYSTEM_TIME synonyms). The literal is an
-# integer (snapshot version — or epoch millis for TIMESTAMP), a
-# quoted string (tag/branch name — or an ISO timestamp), or a
-# TIMESTAMP '...' literal.
-_ASOF_RE = re.compile(
-    r"(?P<ident>(?:`[^`]+`|\w+)(?:\.(?:`[^`]+`|\w+))*)"
-    r"\s+(?:FOR\s+)?(?P<kind>SYSTEM_VERSION|VERSION|SYSTEM_TIME|TIMESTAMP)"
-    r"\s+AS\s+OF\s+"
-    r"(?P<lit>TIMESTAMP\s+'[^']*'|'[^']*'|\d+)",
-    re.IGNORECASE,
-)
-# Iceberg metadata-table addressing in a SELECT: `FROM <table>.history`
-# etc. — the FROM/JOIN context (or a validated FROM-list comma — r11,
-# judge item #5) is REQUIRED so a qualified column reference
-# (`SELECT t.history FROM ...`) is never hijacked; with an optional
-# VERSION AS OF pin for the two version-scoped kinds (files/partitions).
-# A comma match is accepted ONLY when its offset is in the statement's
-# `_from_comma_positions` set (relation separators), so a SELECT-list
-# or function-argument comma can never introduce a rewrite.
-_META_RE = re.compile(
-    r"(?P<ctx>\b(?:FROM|JOIN)\s+|,\s*)"
-    r"(?P<ident>(?:`[^`]+`|\w+)(?:\.(?:`[^`]+`|\w+))*)"
-    r"\.(?P<kind>snapshots|files|partitions|refs|history|maintenance)\b"
-    r"(?:\s+(?:FOR\s+)?(?:SYSTEM_VERSION|VERSION)\s+AS\s+OF\s+"
-    r"(?P<v>'[^']*'|\d+))?",
-    re.IGNORECASE,
-)
-# plain FROM/JOIN (or FROM-list comma) reference to a REGISTERED table
-# with no time-travel or metadata clause: resolved to a pinned
-# current-version view, so a runner-registered table is SQL-queryable
-# by its name with no separate register_sql step (and each statement
-# reads ONE snapshot — per-statement snapshot isolation). Runs LAST:
-# time-travel/metadata clauses were already substituted, so whatever
-# still follows FROM/JOIN here is a plain reference.
-_PLAIN_RE = re.compile(
-    r"(?P<ctx>\b(?:FROM|JOIN)\s+|,\s*)"
-    r"(?P<ident>(?:`[^`]+`|\w+)(?:\.(?:`[^`]+`|\w+))*)",
-    re.IGNORECASE,
-)
 
+#: Iceberg metadata-table suffixes a registered table name may carry
+#: (``FROM t.files``); ``maintenance`` addresses a registered MV
+_META_KINDS = frozenset({
+    "snapshots", "files", "partitions", "refs", "history", "maintenance"})
 
-def _mask_strings(text: str) -> str:
-    """Copy of ``text`` with the CONTENTS of string literals blanked
-    to spaces (quotes kept, length preserved) so the rewrite regexes
-    see SQL structure, never data — a literal mentioning a table name
-    plus ``VERSION AS OF`` (or ``.files``) must not be rewritten.
-    Handles single- and double-quoted strings and backslash escapes;
-    SQL's doubled-quote escape degrades safely (close+reopen).
-    Length preservation means match spans on the masked text index
-    straight into the original."""
-    out = list(text)
-    q = None
-    i = 0
-    while i < len(text):
-        ch = text[i]
-        if q is None:
-            if ch in "'\"":
-                q = ch
-        elif ch == "\\" and i + 1 < len(text):
-            out[i] = out[i + 1] = " "
-            i += 2
-            continue
-        elif ch == q:
-            q = None
-        else:
-            out[i] = " "
-        i += 1
-    return "".join(out)
-
-
-def _skip_parens(masked: str, i: int) -> int:
-    """Index just past the ``)`` matching the ``(`` at ``masked[i]``
-    (depth scan on the literal-masked text; unbalanced text returns
-    end-of-string, degrading to a no-op for the caller)."""
-    depth = 0
-    for j in range(i, len(masked)):
-        if masked[j] == "(":
-            depth += 1
-        elif masked[j] == ")":
-            depth -= 1
-            if depth == 0:
-                return j + 1
-    return len(masked)
-
-
-def _collect_cte_names(masked: str) -> set:
-    """Normalized aliases of every CTE defined anywhere in the
-    statement (``WITH [RECURSIVE] <name> [(cols)] AS ( ... )
-    [, <name2> AS ( ... ) ...]``), scanned on the literal-masked text.
-
-    Standard SQL (and Spark itself) resolves a WITH-clause name BEFORE
-    the catalog, so the table-reference rewrites must never substitute
-    a registered lake table for an identifier the statement binds as a
-    CTE (r10 judge finding: ``WITH t AS (SELECT 99 AS x) SELECT *
-    FROM t`` with ``t`` registered silently read the lake table).
-    Names are collected at EVERY nesting level, deliberately
-    conservative: a registered single-part name that collides with a
-    CTE alias defined in some inner scope is exempted from rewriting
-    even where the CTE is out of scope — Spark then fails loudly
-    (TABLE_OR_VIEW_NOT_FOUND) instead of this runner silently reading
-    the wrong relation; qualify the table reference (two-part name)
-    to disambiguate."""
-    names: set = set()
-    for m in re.finditer(r"\bWITH\b", masked, re.IGNORECASE):
-        i = m.end()
-        rm = re.match(r"\s+RECURSIVE\b", masked[i:], re.IGNORECASE)
-        if rm:
-            i += rm.end()
-        while True:
-            nm = re.match(r"\s*(`[^`]+`|\w+)\s*", masked[i:])
-            if not nm:
-                break
-            name = nm.group(1)
-            i += nm.end()
-            if i < len(masked) and masked[i] == "(":
-                # optional CTE column list: WITH t (a, b) AS (...)
-                i = _skip_parens(masked, i)
-            am = re.match(r"\s*AS\s*\(", masked[i:], re.IGNORECASE)
-            if not am:
-                break  # not a CTE intro (e.g. a misfired WITH match)
-            i = _skip_parens(masked, i + am.end() - 1)
-            names.add(name.replace("`", "").lower())
-            cm = re.match(r"\s*,", masked[i:])
-            if not cm:
-                break
-            i += cm.end()
-    return names
-
-
-#: tokens that END a FROM list when seen at the list's paren depth —
-#: a comma past one of these is no longer a relation separator
-_FROM_LIST_END = frozenset({
-    "WHERE", "GROUP", "HAVING", "ORDER", "LIMIT", "WINDOW", "UNION",
-    "INTERSECT", "EXCEPT", "MINUS", "DISTRIBUTE", "SORT", "CLUSTER",
-    "LATERAL",  # LATERAL VIEW alias lists carry their own commas
-})
-
-
-def _from_comma_positions(masked: str) -> set:
-    """Offsets (into the masked text) of commas that separate
-    RELATIONS in a legacy comma-separated FROM list — the positions
-    where ``, <table-ref>`` may be rewritten. Tracked per paren depth:
-    a ``FROM`` opens the list at its depth; the matching close paren,
-    or any clause keyword in ``_FROM_LIST_END`` at that depth, closes
-    it. Commas at a DEEPER depth (function arguments, subqueries,
-    IN-lists) are never relation separators."""
-    positions: set = set()
-    state: dict = {}  # depth -> True while inside a FROM list
-    depth = 0
-    for tok in re.finditer(r"`[^`]*`|\w+|\S", masked):
-        t = tok.group(0)
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            state.pop(depth, None)
-            depth -= 1
-        elif t == ",":
-            if state.get(depth):
-                positions.add(tok.start())
-        elif t[0].isalpha() or t[0] == "_":
-            u = t.upper()
-            if u == "FROM":
-                state[depth] = True
-            elif u in _FROM_LIST_END and state.get(depth):
-                state[depth] = False
-    return positions
-
-
-def _sub_spans(regex: re.Pattern, statement: str, masked: str, repl):
-    """``regex.sub`` driven by matches on the MASKED text but emitting
-    slices of the ORIGINAL: ``repl(m, orig, tail)`` gets the masked
-    match, an ``orig(group)`` accessor returning the original text at
-    that group's span (quoted literals arrive unmasked), and the
-    masked text FOLLOWING the match (alias lookahead)."""
-    out, pos = [], 0
-    for m in regex.finditer(masked):
-        def orig(group, _m=m):
-            s, e = _m.span(group)
-            return statement[s:e]
-
-        out.append(statement[pos:m.start()])
-        out.append(repl(m, orig, masked[m.end():]))
-        pos = m.end()
-    out.append(statement[pos:])
-    return "".join(out)
-
-
-#: tokens that may legally FOLLOW a relation with no alias between —
-#: if the next token is one of these (or punctuation/EOF), the
-#: original reference had NO alias, so the substituted view gets the
-#: original name's last segment as one (SQL's implicit qualifier:
-#: ``SELECT t.c FROM db.t`` must keep resolving after the rewrite)
-_POST_RELATION_KEYWORDS = frozenset({
-    "WHERE", "ON", "GROUP", "ORDER", "HAVING", "LIMIT", "UNION",
-    "INTERSECT", "EXCEPT", "MINUS", "JOIN", "INNER", "LEFT", "RIGHT",
-    "FULL", "CROSS", "NATURAL", "ANTI", "SEMI", "USING", "WHEN",
-    "TABLESAMPLE", "PIVOT", "UNPIVOT", "LATERAL", "WINDOW",
-    "DISTRIBUTE", "SORT", "CLUSTER", "THEN",
-})
-
-
-#: keywords in ``_POST_RELATION_KEYWORDS`` that are AMBIGUOUS with a
-#: legal bare alias (Spark's non-reserved words): each is treated as
-#: a keyword only when followed by its grammatical continuation, else
-#: it is the relation's explicit alias (r10 advisor: ``FROM t VERSION
-#: AS OF 3 window`` aliased the view as ``window``; the old
-#: classification injected a second alias before it). Keywords NOT
-#: listed here (WHERE, ON, LIMIT, ...) stay unconditional — aliasing
-#: a relation with one of those names needs the ``AS`` spelling.
-_KEYWORD_CONTINUATION = {
-    "GROUP": r"BY\b", "ORDER": r"BY\b", "DISTRIBUTE": r"BY\b",
-    "SORT": r"BY\b", "CLUSTER": r"BY\b",
-    "LEFT": r"(?:OUTER\s+|SEMI\s+|ANTI\s+)?JOIN\b",
-    "RIGHT": r"(?:OUTER\s+|SEMI\s+|ANTI\s+)?JOIN\b",
-    "FULL": r"(?:OUTER\s+)?JOIN\b",
-    "CROSS": r"JOIN\b",
-    "INNER": r"JOIN\b",
-    "ANTI": r"JOIN\b",
-    "SEMI": r"JOIN\b",
-    "NATURAL": r"(?:LEFT\s+|RIGHT\s+|FULL\s+|INNER\s+)?"
-               r"(?:OUTER\s+|SEMI\s+|ANTI\s+)?JOIN\b",
-    "WINDOW": r"(?:`[^`]+`|\w+)\s+AS\b",
-    "USING": r"\(",
+#: the grammar quoted back when Spark's parser rejects a statement,
+#: keyed by its first keyword
+_USAGE = {
+    "MERGE": "MERGE INTO <t> [AS] t USING <view> | (<subquery>) [AS] s "
+             "ON s.<k> = t.<k> [AND ...] WHEN [NOT] MATCHED [BY TARGET] "
+             "[AND <src-cond>] THEN DELETE | UPDATE SET * | INSERT * "
+             "[WHEN NOT MATCHED BY SOURCE THEN DELETE]",
+    "DELETE": "DELETE FROM <t> [[AS] a] [WHERE <cond>]",
+    "UPDATE": "UPDATE <t> [[AS] a] SET c = expr [, ...] [WHERE <cond>]",
+    "INSERT": "INSERT INTO|OVERWRITE [TABLE] <t> [PARTITION (p = <lit>)] "
+              "[(c1, ...)] VALUES (...) | SELECT ...",
+    "TRUNCATE": "TRUNCATE TABLE <t>",
+    "EXPLAIN": "EXPLAIN [EXTENDED|FORMATTED|CODEGEN|COST] SELECT ...",
 }
 
 
-def _implicit_alias(ident: str, tail: str) -> str:
-    """`` <last-segment>`` when the rewritten reference needs the
-    original name re-attached as an alias, else the empty string
-    (an explicit alias — ``AS x`` or a bare identifier — follows).
-    A following token that is an AMBIGUOUS keyword (``window``,
-    ``group``, ``left`` ... — all legal bare aliases in Spark) counts
-    as the keyword only when its grammatical continuation follows
-    (``GROUP BY``, ``LEFT ... JOIN``, ``WINDOW w AS``); otherwise it
-    IS the alias and nothing is injected."""
-    m = re.match(r"\s*(`[^`]+`|\w+)", tail)
-    tok = m.group(1) if m else ""
-    up = tok.upper()
-    if up == "AS":
-        return ""
-    is_kw = bool(tok) and up in _POST_RELATION_KEYWORDS
-    if is_kw and up in _KEYWORD_CONTINUATION:
-        after = tail[m.end():]
-        is_kw = re.match(r"\s*" + _KEYWORD_CONTINUATION[up], after,
-                         re.IGNORECASE) is not None
-    if tok and not is_kw:
-        return ""  # explicit alias follows
-    last = ident.replace("`", "").split(".")[-1]
-    return f" {last}"
+def _seq(s) -> list:
+    """A Scala ``Seq`` from the JVM parse tree as a Python list."""
+    return [s.apply(i) for i in range(s.size())]
+
+
+def _opt(o):
+    """A Scala ``Option``'s value, or None."""
+    return o.get() if o.isDefined() else None
+
+
+def _text(statement: str, node) -> str:
+    """The source text of a parse-tree node: its origin span (start and
+    stop character indices, stop inclusive) sliced from the statement
+    Spark parsed. String literals and comments inside the span are the
+    user's exact text."""
+    o = node.origin()
+    return statement[o.startIndex().get():o.stopIndex().get() + 1]
+
+
+def _ident(node) -> list[str]:
+    """Name parts of an unresolved relation or table reference
+    (backticks already removed by the parser)."""
+    return _seq(node.multipartIdentifier())
+
+
+def _aliased(node):
+    """``(relation, alias)`` of a DML target or MERGE source: a
+    ``SubqueryAlias`` is unwrapped (in MERGE/UPDATE/DELETE its own span
+    is the whole statement; the child carries the relation's span);
+    ``alias`` is None when the statement names none."""
+    if node.nodeName() == "SubqueryAlias":
+        return node.child(), node.alias()
+    return node, None
+
+
+def _expr_nodes(e) -> list:
+    """Every node of an expression tree, pre-order."""
+    return [e] + [n for c in _seq(e.children()) for n in _expr_nodes(c)]
+
+
+def _conjuncts(e) -> list:
+    """The AND-ed terms of a condition."""
+    if e.nodeName() == "And":
+        return [x for c in _seq(e.children()) for x in _conjuncts(c)]
+    return [e]
 
 
 def _asof_ts_ms(lit: str) -> int:
@@ -506,7 +291,7 @@ def _asof_ts_ms(lit: str) -> int:
     m = re.match(r"^TIMESTAMP\s+'(?P<t>[^']*)'$", s, re.IGNORECASE)
     if m:
         t = m.group("t")
-    elif s.startswith("'") and s.endswith("'"):
+    elif len(s) > 1 and s[0] == s[-1] and s[0] in "'\"":
         t = s[1:-1]
     else:
         n = int(s)  # bare integer: millis >= 1e12, else seconds
@@ -530,8 +315,9 @@ def _asof_ts_ms(lit: str) -> int:
 
 def _split_top_level(text: str) -> list[str]:
     """Split on commas outside parentheses AND outside single-quoted
-    strings (SET lists, column lists, CALL arguments — expression
-    arguments and string literals keep their commas)."""
+    strings (ALTER key lists, TBLPROPERTIES, MV select lists, CALL
+    arguments — expression arguments and string literals keep their
+    commas)."""
     parts, depth, cur, in_str = [], 0, [], False
     for ch in text:
         if ch == "'":
@@ -622,32 +408,49 @@ class MergeSqlRunner:
     def _norm_ident(ident: str) -> str:
         return ident.replace("`", "").strip().lower()
 
+    def _parse(self, statement: str):
+        """Spark's own parse tree of ``statement`` (its SQL parser, no
+        analysis: every name is still unresolved). A statement Spark
+        cannot parse raises pyspark's ``ParseException``."""
+        try:
+            return self.spark._jsparkSession.sessionState().sqlParser()\
+                .parsePlan(statement)
+        except Py4JJavaError as exc:
+            raise convert_exception(exc.java_exception) from None
+
+    @staticmethod
+    def _unsupported(statement: str, reason) -> MergeSqlError:
+        """The error for a statement outside the subset: the grammar of
+        its statement kind (by first keyword) plus Spark's reason."""
+        kind = (statement.split(None, 1) or [""])[0].upper()
+        if isinstance(reason, ParseException):
+            hint = reason.getMessageParameters().get("hint", "")
+            reason = str(reason).strip().splitlines()[0]
+            if "missing ')'" in hint:
+                reason = f"unbalanced parentheses: {reason}"
+        if kind in _USAGE:
+            return MergeSqlError(
+                f"unsupported {kind}; expected {_USAGE[kind]} ({reason})")
+        return MergeSqlError(
+            "unsupported statement; expected SELECT, MERGE INTO, DELETE "
+            "FROM, UPDATE ... SET, INSERT INTO|OVERWRITE, TRUNCATE TABLE, "
+            "EXPLAIN or the DDL listed in lake/merge_sql.py "
+            f"({reason})")
+
     def sql(self, statement: str) -> None:
-        """Parse and execute one DML statement (MERGE INTO, DELETE
-        FROM, UPDATE, or INSERT INTO) against a registered table.
-        SELECT / WITH statements delegate to :meth:`query` (time-travel
-        resolution) and return its DataFrame."""
+        """Parse and execute one statement against registered tables.
+        The DDL and maintenance statements route by their first
+        keywords; every other statement is parsed by Spark's SQL parser
+        and routed by the root node of its tree: MERGE INTO, DELETE
+        FROM, UPDATE, INSERT INTO|OVERWRITE and TRUNCATE run as keyed
+        merges, EXPLAIN explains the rewritten query, and a query
+        delegates to :meth:`query` (time-travel resolution) and returns
+        its DataFrame."""
         head = statement.lstrip()[:6].upper()
-        if head.startswith("SELECT") or re.match(r"^\s*WITH\b", statement,
-                                                 re.IGNORECASE):
-            return self.query(statement)
-        if head.startswith("DELETE"):
-            return self._run_delete(statement)
-        if head.startswith("UPDATE"):
-            return self._run_update(statement)
-        if head.startswith("INSERT"):
-            if re.match(r"^\s*INSERT\s+OVERWRITE\b", statement,
-                        re.IGNORECASE):
-                return self._run_insert_overwrite(statement)
-            return self._run_insert(statement)
-        if head.startswith("TRUNCA"):
-            return self._run_truncate(statement)
         if head.startswith("SHOW"):
             return self._run_show(statement)
         if head.startswith("DESC"):
             return self._run_describe(statement)
-        if head.startswith("EXPLAI"):
-            return self._run_explain(statement)
         if head.startswith("ALTER"):
             return self._run_alter(statement)
         if head.startswith("CALL"):
@@ -665,88 +468,174 @@ class MergeSqlRunner:
             return self._run_use(statement)
         if head.startswith("CREATE"):
             return self._run_create(statement)
-        statement = self._inline_merge_source(statement)
-        m = _MERGE_RE.match(statement)
-        if not m:
-            raise MergeSqlError(
-                "unsupported statement; expected MERGE INTO <t> t USING "
-                "<s>|(SELECT ...) s ON ... WHEN [NOT] MATCHED [AND cond] "
-                "THEN DELETE | UPDATE SET * | INSERT * — or DELETE FROM "
-                "/ UPDATE ... SET / INSERT INTO / ALTER TABLE"
-            )
-        # MERGE may target a not-yet-created table (first merge creates)
-        table = self._resolve(m.group("target"), require_exists=False)
-        talias, salias = m.group("talias"), m.group("salias")
-        self._check_on(m.group("on"), table, talias, salias)
+        try:
+            plan = self._parse(statement)
+        except ParseException as exc:
+            # Spark's MERGE grammar is stricter about WHEN clause order
+            # and omitted conditions than first-match routing needs: such
+            # a MERGE is retried in the grammar's shape
+            grouped = self._grouped_merge_clauses(statement)
+            try:
+                plan = grouped and self._parse(grouped)
+            except ParseException:
+                plan = None
+            if not plan or plan.nodeName() != "MergeIntoTable":
+                raise self._unsupported(statement, exc) from None
+            statement = grouped
+        run = {
+            "MergeIntoTable": self._run_merge,
+            "DeleteFromTable": self._run_delete,
+            "UpdateTable": self._run_update,
+            "InsertIntoStatement": self._run_insert,
+            "TruncateTable": self._run_truncate,
+            "ExplainCommand": self._run_explain,
+        }.get(plan.nodeName())
+        if run is not None:
+            return run(statement, plan)
+        if self._is_command(plan):
+            raise self._unsupported(
+                statement, f"Spark parses it as {plan.nodeName()}")
+        return self.spark.sql(self._rewrite(statement, plan))
 
-        raw_clauses = list(_CLAUSE_RE.finditer(m.group("clauses")))
-        if not raw_clauses:
-            raise MergeSqlError("no WHEN clauses found")
-        # (kind, not_matched, cond_text, cond_col) in statement order —
-        # SQL MERGE gives the first admitting clause the row. BY SOURCE
-        # deletes are tracked separately: they generate rows FROM the
-        # target, not a routing of source rows.
-        parsed = []
-        by_source_delete = False
-        for c in raw_clauses:
-            action = re.sub(r"\s+", " ", c.group("action")).upper()
-            not_matched = bool(c.group("not"))
-            by = re.sub(r"\s+", "", c.group("by") or "").upper()
-            if by == "BYSOURCE":
-                if not not_matched:
-                    raise MergeSqlError(
-                        "WHEN MATCHED BY SOURCE is not valid MERGE")
-                if action != "DELETE":
-                    raise MergeSqlError(
-                        "NOT MATCHED BY SOURCE supports THEN DELETE only "
-                        "in this subset (UPDATE there needs target-side "
-                        "expressions)")
-                if c.group("cond") is not None:
-                    raise MergeSqlError(
-                        "conditions on NOT MATCHED BY SOURCE reference "
-                        "target columns; unsupported in this subset")
-                by_source_delete = True
+    def _grouped_merge_clauses(self, statement: str) -> str | None:
+        """``statement`` with its WHEN clauses in the shape Spark's MERGE
+        grammar requires — grouped MATCHED, NOT MATCHED, NOT MATCHED BY
+        SOURCE, and only a group's last clause without a condition — or
+        None when nothing changes. Under first-match routing clauses of
+        different groups never compete for a row, and a clause after an
+        unconditional one of its group never fires (dropped). Clauses
+        start at Spark's lexer tokens ``WHEN`` outside parentheses and
+        ``CASE ... END`` (a literal or comment is one token)."""
+        jvm = self.spark._jvm
+        lexer = jvm.org.apache.spark.sql.catalyst.parser.SqlBaseLexer(
+            jvm.org.antlr.v4.runtime.CharStreams.fromString(statement))
+        toks = [(t.getText().upper(), t.getStartIndex())
+                for t in lexer.getAllTokens() if t.getChannel() == 0]
+        starts, depth, end = [], 0, len(statement)
+        for i, (tok, pos) in enumerate(toks):
+            if tok in ("(", "CASE"):
+                depth += 1
+            elif tok in (")", "END"):
+                depth -= 1
+            elif tok == ";" and depth == 0:
+                end = pos
+                break
+            elif tok == "WHEN" and depth == 0:
+                # WHEN MATCHED | WHEN NOT MATCHED [BY TARGET|SOURCE]
+                words = [w for w, _ in toks[i + 1:i + 6]]
+                if words[:1] == ["MATCHED"]:
+                    group, head = 0, 1
+                elif words[2:3] == ["BY"]:
+                    group, head = 1 + (words[3:4] == ["SOURCE"]), 4
+                else:
+                    group, head = 1, 2
+                starts.append((pos, group, words[head:head + 1] == ["AND"]))
+        bounds = [pos for pos, _, _ in starts] + [end]
+        clauses = [(group, cond, statement[bounds[i]:bounds[i + 1]].strip())
+                   for i, (_, group, cond) in enumerate(starts)]
+        kept, closed = [], set()
+        for group, cond, text in sorted(clauses, key=lambda c: c[0]):
+            if group in closed:
                 continue
-            if action == "DELETE" and not_matched:
-                raise MergeSqlError("WHEN NOT MATCHED THEN DELETE "
-                                    "is not meaningful")
-            if action != "DELETE" and (
-                (action == "UPDATE SET *") == not_matched
-            ):
-                raise MergeSqlError(
-                    f"WHEN {'NOT ' if not_matched else ''}MATCHED THEN "
-                    f"{action} is not valid MERGE (UPDATE is matched-only, "
-                    "INSERT is not-matched-only)"
-                )
-            kind = ("delete" if action == "DELETE"
-                    else "update" if action == "UPDATE SET *" else "insert")
-            cond_text = (None if c.group("cond") is None
-                         else re.sub(r"\s+", " ", c.group("cond")).strip().lower())
-            parsed.append((kind, not_matched, cond_text,
-                           self._src_condition(c.group("cond"), salias, talias)))
+            kept.append((group, cond, text))
+            if not cond:
+                closed.add(group)
+        if kept == clauses:
+            return None
+        return " ".join([statement[:bounds[0]].rstrip()]
+                        + [text for _, _, text in kept]) + statement[end:]
 
-        src_norm = self._norm_ident(m.group("source"))
-        if src_norm in self._tables:
-            # lake-to-lake MERGE by registered name (the USING side
-            # reads the source table's CURRENT live rows)
-            src = self._tables[src_norm].read_data()
+    def _is_command(self, plan) -> bool:
+        """True for a parsed command or statement (DDL, DML, SET ...),
+        False for a query."""
+        gw = self.spark.sparkContext._gateway
+        return any(is_instance_of(
+            gw, plan, f"org.apache.spark.sql.catalyst.plans.logical.{cls}")
+            for cls in ("Command", "ParsedStatement"))
+
+    def _run_merge(self, statement: str, plan) -> None:
+        """MERGE INTO, read from Spark's ``MergeIntoTable`` node: the
+        target and source relations and aliases, the ON condition and
+        each clause's action and condition. Clause conditions are the
+        statement's own text, evaluated on the source aliased as in
+        the statement."""
+        rel, talias = _aliased(plan.targetTable())
+        target = _ident(rel)
+        # MERGE may target a not-yet-created table (first merge creates)
+        table = self._resolve(".".join(target), require_exists=False)
+        talias = talias or target[-1]
+        src_rel, salias = _aliased(plan.sourceTable())
+        src_name = (_ident(src_rel)
+                    if src_rel.nodeName() == "UnresolvedRelation" else None)
+        salias = salias or (src_name and src_name[-1])
+        self._check_on(statement, plan.mergeCondition(), table,
+                       talias, salias)
+
+        # (kind, not_matched, cond_key, cond_col) in statement order
+        # within each matched state: the first admitting clause wins
+        parsed = []
+        for not_matched, actions in ((False, plan.matchedActions()),
+                                     (True, plan.notMatchedActions())):
+            for action in _seq(actions):
+                kind = {"DeleteAction": "delete",
+                        "UpdateStarAction": "update",
+                        "InsertStarAction": "insert"}.get(action.nodeName())
+                if kind is None:
+                    raise MergeSqlError(
+                        "UPDATE SET * / INSERT * only (full row images); "
+                        "explicit SET or VALUES lists are outside this "
+                        "subset")
+                cond = _opt(action.condition())
+                parsed.append((
+                    kind, not_matched,
+                    None if cond is None else cond.toString(),
+                    self._src_condition(statement, cond, talias)))
+        # BY SOURCE deletes generate rows FROM the target, not a
+        # routing of source rows
+        by_source_delete = False
+        for action in _seq(plan.notMatchedBySourceActions()):
+            if action.nodeName() != "DeleteAction":
+                raise MergeSqlError(
+                    "NOT MATCHED BY SOURCE supports THEN DELETE only "
+                    "in this subset (UPDATE there needs target-side "
+                    "expressions)")
+            if action.condition().isDefined():
+                raise MergeSqlError(
+                    "conditions on NOT MATCHED BY SOURCE reference "
+                    "target columns; unsupported in this subset")
+            by_source_delete = True
+
+        if src_name is not None:
+            src_norm = self._norm_ident(".".join(src_name))
+            if src_norm in self._tables:
+                # lake-to-lake MERGE by registered name (the USING side
+                # reads the source table's CURRENT live rows)
+                src = self._tables[src_norm].read_data()
+            else:
+                src = self.spark.table(_text(statement, src_rel))
         else:
-            src = self.spark.table(m.group("source"))
+            # USING (<query>) runs through query(), so it may pin time
+            # travel (the restore-a-version MERGE); kept as a
+            # content-addressed temp view on the read pins' LRU
+            sub = _text(statement, src_rel)
+            src = self.query(sub)
+            view = (f"__merge_src_{id(self):x}_"
+                    f"{hashlib.sha1(sub.encode()).hexdigest()[:10]}")
+            src.createOrReplaceTempView(view)
+            self._track_asof_view(view, {view})
+        if salias:
+            src = src.alias(salias)
         parts = []
         if parsed:
             routed = (self._fast_path_batch(src, parsed)
                       if self._fast_path_ok(parsed)
                       else self._probed_batch(src, table, parsed))
             if OP_TS_COL not in routed.columns and table.store_lineage:
-                # statement-executed-now semantics for a source WITHOUT
-                # CDC lineage: a null-timestamp batch would lose the
-                # late-data guard to any stored row that carries one
-                # (e.g. written by INSERT/UPDATE, which stamp) and the
-                # MERGE would silently no-op — found by the r5 random
-                # soak, the same hazard class as the r4 DML finding. A
-                # source that DOES carry _op_timestamp (a CDC staging
-                # frame, the reference's flow) keeps it: that is
-                # exactly the late-data-guarded path.
+                # statement-executed-now for a source WITHOUT CDC
+                # lineage: a null-timestamp batch would lose the
+                # late-data guard to any stored row that carries one and
+                # silently no-op (r5 soak). A CDC staging frame keeps
+                # its own _op_timestamp: the late-data-guarded path.
                 routed = routed.withColumn(
                     OP_TS_COL, F.current_timestamp().cast("timestamp"))
             parts.append(routed)
@@ -767,52 +656,6 @@ class MergeSqlRunner:
             batch = batch.unionByName(extra, allowMissingColumns=True)
         table.merge(batch)
 
-    def _inline_merge_source(self, statement: str) -> str:
-        """``MERGE INTO t t USING (SELECT ...) s`` — evaluate the
-        subquery source through :meth:`query` (so it may itself pin a
-        time-travel read: ``USING (SELECT * FROM t VERSION AS OF 3)``
-        is the restore-a-version MERGE) and substitute a temp view,
-        leaving the named-view grammar untouched. The matching close
-        paren is found with the house literal-aware depth scan."""
-        m = re.match(
-            r"(?is)^(?P<head>\s*MERGE\s+INTO\s+[\w.`]+\s+(?:AS\s+)?\w+"
-            r"\s+USING\s*)\((?P<rest>.+)$",
-            statement)
-        if not m:
-            return statement
-        rest = m.group("rest")
-        depth, end = 1, -1
-        # scan the literal-masked twin: a quoted ')' — single- OR
-        # double-quoted, backslash escapes included — is data
-        for i, ch in enumerate(_mask_strings(rest)):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    end = i
-                    break
-        if end < 0:
-            raise MergeSqlError(
-                "unbalanced parentheses in MERGE USING (subquery)")
-        sub = rest[:end].strip()
-        if not re.match(r"(?is)^(SELECT|WITH|VALUES)\b", sub):
-            raise MergeSqlError(
-                f"MERGE USING (...) expects a SELECT/VALUES subquery, "
-                f"got {sub[:40]!r}")
-        import hashlib
-
-        # content-addressed (same subquery text -> same view, no
-        # unbounded counter) + runner-scoped (two live runners may
-        # resolve the same text against different registrations);
-        # rides the same LRU cap as the asof/meta pins
-        digest = hashlib.sha1(sub.encode()).hexdigest()[:10]
-        view = f"__merge_src_{id(self):x}_{digest}"
-        (self.query(sub) if not sub.upper().startswith("VALUES")
-         else self.spark.sql(sub)).createOrReplaceTempView(view)
-        self._track_asof_view(view, {view})
-        return m.group("head") + view + rest[end + 1:]
-
     # -- SELECT with time travel (Iceberg/Athena read parity) ------------
 
     def query(self, statement: str) -> DataFrame:
@@ -828,239 +671,230 @@ class MergeSqlRunner:
             SELECT ... FROM t.files | t.partitions [VERSION AS OF v]
             SELECT ... FROM t          -- plain ref: pinned CURRENT version
 
-        A plain FROM/JOIN reference to a registered table resolves to
-        a view pinned at the table's current version — registered
-        tables are queryable by name with no separate ``register_sql``
-        step, and one statement reads ONE snapshot (per-statement
-        snapshot isolation, matching what the manifest gives the
-        DataFrame path).
+        A plain reference to a registered table resolves to a view
+        pinned at the table's current version — registered tables are
+        queryable by name with no separate ``register_sql`` step, and
+        one statement reads ONE snapshot (per-statement snapshot
+        isolation, matching what the manifest gives the DataFrame
+        path).
 
         Plain Spark parses this syntax but executes it only against a
         v2 catalog table (the Iceberg jar this image lacks); Athena
-        gives it to every reference-table reader. Each clause whose
-        table identifier is REGISTERED on this runner is resolved
-        through the engine's manifest time travel (``read_data``
-        as-of semantics: VERSION pins an exact snapshot — or a tag /
-        branch head by name; TIMESTAMP takes the newest snapshot
-        committed at or before the instant), pinned as a temp view,
-        and substituted; everything else in the statement passes to
-        ``spark.sql`` untouched, so pinned and current reads compose
-        in one statement. Clauses over identifiers NOT registered
-        here are left for Spark to resolve (they may target a real v2
-        catalog). Statements with no time-travel clause pass straight
-        through, so ``query`` is a drop-in read entry point.
+        gives it to every reference-table reader. Every relation in
+        Spark's parse tree of the statement (FROM/JOIN lists, CTE
+        bodies, subqueries) whose identifier is REGISTERED here is
+        resolved through the manifest (VERSION pins a snapshot, a tag
+        or a branch head; TIMESTAMP the newest snapshot at or before the
+        instant), pinned as a temp view and spliced over the relation's
+        source span; the rest goes to ``spark.sql`` untouched, so pinned
+        and current reads compose in one statement and unregistered
+        names are Spark's to resolve. Literals, comments and columns
+        are never relations, so they are never rewritten. A spliced
+        view keeps the name's last part as its alias unless the
+        statement gives one (``SELECT t.c FROM db.t``). A single-part
+        name bound by a WITH clause in scope reads the CTE, as in
+        Spark (``WITH t AS (...) SELECT * FROM t``); the two-part
+        registered spelling still pins the lake table."""
+        return self.spark.sql(self._rewrite(statement, self._parse(statement)))
 
-        Validated-subset caveats: clause detection is textual but
-        STRING-LITERAL-SAFE — the rewrites scan a literal-masked
-        twin of the statement (``_mask_strings``), so a literal that
-        merely mentions a table name plus ``VERSION AS OF`` or
-        ``.files`` is never touched; metadata refs additionally
-        require FROM/JOIN context (or a validated FROM-list comma —
-        relation separators only, so a qualified COLUMN named
-        ``history``/``files`` in a SELECT list is never hijacked).
-        Name resolution follows Spark/standard SQL precedence: an
-        identifier bound as a CTE anywhere in the statement is NEVER
-        rewritten (``WITH t AS (...) SELECT * FROM t`` reads the CTE
-        even when ``t`` is registered — r10 judge finding); the
-        exemption is by the CTE's single-part name, so the two-part
-        registered spelling still pins the lake table, and a
-        registered name colliding with an out-of-scope inner CTE
-        alias fails loudly in Spark rather than silently rebinding —
-        qualify the reference to disambiguate."""
-        return self.spark.sql(self._rewrite(statement))
-
-    def _rewrite(self, statement: str) -> str:
-        """The text-level resolution behind :meth:`query` (and
-        ``EXPLAIN``): returns the statement with every registered-ref
-        / time-travel / metadata clause substituted by a pinned temp
-        view, leaving everything else for Spark."""
-        masked0 = _mask_strings(statement)
-        cte_names = _collect_cte_names(masked0)
-        from_commas: set = set()
-
-        def _comma_ok(m: re.Match) -> bool:
-            # a comma-context match counts only when the comma is a
-            # FROM-list RELATION separator; every other comma
-            # (SELECT list, IN list, argument) leaves the text alone
-            if "ctx" not in m.re.groupindex:
-                return True
-            ctx = m.group("ctx")
-            return (not ctx.startswith(",")
-                    or m.start("ctx") in from_commas)
-
-        def _cte_shadowed(ident: str, norm: str) -> bool:
-            # WITH binds tighter than this runner's registry: a
-            # SINGLE-part reference whose name the statement defines
-            # as a CTE resolves to the CTE (Spark's own precedence)
-            return "." not in norm and norm in cte_names
-
-        def _sub(m: re.Match, orig, tail) -> str:
-            ident = m.group("ident")
-            norm = self._norm_ident(ident)
-            if _cte_shadowed(ident, norm):
-                return orig(0)
-            norm = self._expand_ident(norm)  # USE <db> resolution
-            if norm not in self._tables:
-                return orig(0)  # not ours — Spark may resolve it
-            table = self._tables[norm]
-            kind = m.group("kind").upper()
-            lit = orig("lit").strip()
-            safe = self._safe_name(norm, table)
-            try:
-                if kind in ("VERSION", "SYSTEM_VERSION"):
-                    if re.match(r"^\d+$", lit):
-                        version = int(lit)
-                    else:
-                        version = self._resolve_ref_version(
-                            table, lit, ident)
-                    # a version-suffixed view's content is immutable —
-                    # reuse a live pin instead of re-resolving the
-                    # manifest (r11; refs were already resolved to the
-                    # version above, so a moved branch head never
-                    # reuses a stale pin)
-                    view = f"__lake_asof_{safe}_v{version}"
-                    if self._reuse_view(view, fresh):
-                        return view + _implicit_alias(ident, tail)
-                    df = table.read_data(as_of_version=version)
-                else:
-                    # timestamp pins are NOT reusable by name: a
-                    # future-dated literal resolves to head-at-query-
-                    # time, which a later commit changes
-                    ts_ms = _asof_ts_ms(lit)
-                    view = f"__lake_asof_{safe}_ts{ts_ms}"
-                    df = table.read_data(as_of_timestamp_ms=ts_ms)
-            except MergeSqlError:
-                raise
-            except ValueError as exc:
-                # expired/never-committed version, pre-first-commit
-                # timestamp — surface as a statement error
-                raise MergeSqlError(
-                    f"{kind} AS OF {lit} on {ident!r}: {exc}") from None
-            df.createOrReplaceTempView(view)
-            self._track_asof_view(view, fresh)
-            return view + _implicit_alias(ident, tail)
-
-        def _sub_meta(m: re.Match, orig, tail) -> str:
-            if not _comma_ok(m):
-                return orig(0)
-            ident = m.group("ident")
-            norm = self._norm_ident(ident)
-            if _cte_shadowed(ident, norm):
-                return orig(0)
-            norm = self._expand_ident(norm)  # USE <db> resolution
-            if m.group("kind").lower() == "maintenance":
-                # MV maintainer observability (r11 judge item #6):
-                # `<mv>.maintenance` is addressed by the MV registry,
-                # served from the maintainer's persisted sidecar
-                if norm not in self._mvs:
-                    return orig(0)
-                if m.group("v") is not None:
-                    raise MergeSqlError(
-                        f"{ident}.maintenance is not version-scoped")
-                st = self._mvs[norm].maintenance_stats()
-                from pyspark.sql import types as T
-
-                df = self.spark.createDataFrame([(
-                    int(st["folded"]), int(st["fallback"]),
-                    int(st["skipped"]), st["last_batch_id"],
-                    st["last_route"], st["cursor"],
-                    st["updated_at_ms"])], T.StructType([
-                        T.StructField("folded", T.LongType(), False),
-                        T.StructField("fallback", T.LongType(), False),
-                        T.StructField("skipped", T.LongType(), False),
-                        T.StructField("last_batch_id", T.LongType()),
-                        T.StructField("last_route", T.StringType()),
-                        T.StructField("cursor", T.LongType()),
-                        T.StructField("updated_at_ms", T.LongType())]))
-                safe = re.sub(r"\W+", "_", norm)
-                view = f"__lake_meta_{safe}_maintenance"
-                df.createOrReplaceTempView(view)
-                self._track_asof_view(view, fresh)
-                return orig("ctx") + view + _implicit_alias(
-                    f"{ident}.maintenance", tail)
-            if norm not in self._tables:
-                return orig(0)  # not ours — Spark's to resolve
-            table = self._tables[norm]
-            kind = m.group("kind").lower()
-            v = None if m.group("v") is None else orig("v").strip()
-            if v is not None and kind not in ("files", "partitions"):
-                raise MergeSqlError(
-                    f"{ident}.{kind} is table-global; VERSION AS OF "
-                    "applies to .files / .partitions only")
-            if v is not None and v.startswith("'"):
-                # quoted ref: resolve the tag/branch head to a version
-                v = str(self._resolve_ref_version(table, v, ident))
-            safe = self._safe_name(norm, table)
-            view = f"__lake_meta_{safe}_{kind}" + (
-                "" if v is None else f"_v{v}")
-            # version-PINNED metadata (files/partitions AS OF v) is
-            # immutable — reuse a live pin; version-free kinds track
-            # the current table and must re-register every statement
-            if v is not None and self._reuse_view(view, fresh):
-                return orig("ctx") + view + _implicit_alias(
-                    f"{ident}.{kind}", tail)
-            try:
-                df = table.metadata(kind, None if v is None else int(v))
-            except ValueError as exc:
-                raise MergeSqlError(
-                    f"{ident}.{kind} VERSION AS OF {v}: {exc}") from None
-            df.createOrReplaceTempView(view)
-            self._track_asof_view(view, fresh)
-            return orig("ctx") + view + _implicit_alias(
-                f"{ident}.{kind}", tail)
-
-        def _sub_plain(m: re.Match, orig, tail) -> str:
-            if not _comma_ok(m):
-                return orig(0)
-            ident = m.group("ident")
-            norm = self._norm_ident(ident)
-            if _cte_shadowed(ident, norm):
-                return orig(0)
-            norm = self._expand_ident(norm)  # USE <db> resolution
-            if norm not in self._tables:
-                return orig(0)  # Spark's to resolve (views, catalog)
-            table = self._tables[norm]
-            mref = table._manifest()
-            if mref is None:
-                return orig(0)  # no committed snapshot: let Spark err
-            version = mref["version"]
-            safe = self._safe_name(norm, table)
-            view = f"__lake_cur_{safe}_v{version}"
-            # same-version pins are immutable: repeated statements over
-            # an unchanged table reuse the live view instead of
-            # re-resolving the snapshot (r11; the version in the name
-            # came from THIS statement's manifest read, so isolation
-            # still advances with every commit)
-            if not self._reuse_view(view, fresh):
-                table.read_data(as_of_version=version)\
-                    .createOrReplaceTempView(view)
-                self._track_asof_view(view, fresh)
-            return orig("ctx") + view + _implicit_alias(ident, tail)
-
+    def _rewrite(self, statement: str, plan) -> str:
+        """The resolution behind :meth:`query` and ``EXPLAIN``: walks
+        the parse tree (children, CTE bodies, subquery expressions,
+        an EXPLAIN's inner query) and returns the statement with every
+        registered-ref / time-travel / metadata relation replaced, by
+        its source span, with a pinned temp view."""
+        edits = []
         fresh: set = set()
-        rewritten = statement
-        for regex, sub in ((_META_RE, _sub_meta), (_ASOF_RE, _sub),
-                           (_PLAIN_RE, _sub_plain)):
-            masked = _mask_strings(rewritten)
-            from_commas.clear()
-            from_commas.update(_from_comma_positions(masked))
-            rewritten = _sub_spans(regex, rewritten, masked, sub)
-        return rewritten
+
+        def visit(node, aliased: bool, ctes: frozenset) -> None:
+            name = node.nodeName()
+            if name in ("UnresolvedRelation", "RelationTimeTravel"):
+                edits.append(self._pin(statement, node, aliased, ctes, fresh))
+                return
+            if name == "ExplainCommand":
+                visit(node.logicalPlan(), True, ctes)
+                return
+            if name == "UnresolvedWith":
+                # each CTE body sees the names defined before it; the
+                # main query sees them all
+                for cte in _seq(node.cteRelations()):
+                    visit(cte._2(), True, ctes)
+                    ctes = ctes | {cte._1().lower()}
+            for child in _seq(node.children()):
+                visit(child, name == "SubqueryAlias", ctes)
+            for sub in _seq(node.subqueries()):
+                visit(sub, False, ctes)
+
+        # a relation that is the whole query (``TABLE t``) takes no alias
+        visit(plan, True, frozenset())
+        for start, stop, view in sorted(filter(None, edits), reverse=True):
+            statement = statement[:start] + view + statement[stop:]
+        return statement
+
+    def _pin(self, statement: str, node, aliased: bool, ctes: frozenset,
+             fresh: set):
+        """``(start, stop, view)`` replacing one relation of a query
+        by its pinned view, or None when the relation is not this
+        runner's (unregistered, CTE-bound, or no committed snapshot).
+        ``node`` is an ``UnresolvedRelation`` or a
+        ``RelationTimeTravel`` — a leaf whose identifier is in its
+        ``relation`` field and whose own span covers only the ``[FOR]
+        VERSION|TIMESTAMP AS OF`` clause, so the replaced span runs
+        from the identifier to the clause's end."""
+        travel = node if node.nodeName() == "RelationTimeTravel" else None
+        rel = node if travel is None else node.relation()
+        if rel.nodeName() != "UnresolvedRelation":
+            return None
+        parts = _ident(rel)
+        # WITH binds tighter than this runner's registry: a SINGLE-part
+        # reference to a CTE in scope reads the CTE (Spark's precedence)
+        if len(parts) == 1 and parts[0].lower() in ctes:
+            return None
+        version = ts_text = None
+        if travel is not None:
+            version = _opt(travel.version())
+            if version is None:
+                ts_text = _text(statement, travel.timestamp().get())
+            elif _text(statement, travel)[-1:] in "'\"":
+                version = str(version)  # quoted: a tag or branch name
+            else:
+                version = int(version)
+        kind = parts[-1].lower() if len(parts) > 1 else None
+        view = None
+        if kind in _META_KINDS and not (
+                len(parts) == 2 and parts[0].lower() in ctes):
+            view = self._meta_view(".".join(parts[:-1]), kind, version,
+                                   ts_text, fresh)
+        if view is None:
+            view = self._table_view(".".join(parts), version, ts_text, fresh)
+            if view is None:
+                return None  # not ours (Spark may resolve it) or no snapshot
+        start = rel.origin().startIndex().get()
+        stop = node.origin().stopIndex().get() + 1
+        if not aliased:
+            # SQL's implicit qualifier: the original name's last part
+            view += " `" + parts[-1].replace("`", "``") + "`"
+        return start, stop, view
+
+    def _table_view(self, ident: str, version, ts_text,
+                    fresh: set) -> str | None:
+        """Pinned view of registered table ``ident``: at ``version``
+        (an int, or a quoted tag/branch name), at the instant
+        ``ts_text``, or — with neither — at its current version. None
+        when ``ident`` is not registered or has no committed snapshot."""
+        norm = self._expand_ident(self._norm_ident(ident))  # USE <db>
+        if norm not in self._tables:
+            return None
+        table = self._tables[norm]
+        safe = self._safe_name(norm, table)
+        what = (f"TIMESTAMP AS OF {ts_text}" if ts_text is not None
+                else f"VERSION AS OF {version}")
+        try:
+            if ts_text is not None:
+                # timestamp pins are NOT reusable by name: a
+                # future-dated literal resolves to head-at-query-time,
+                # which a later commit changes
+                ts_ms = _asof_ts_ms(ts_text)
+                view = f"__lake_asof_{safe}_ts{ts_ms}"
+                df = table.read_data(as_of_timestamp_ms=ts_ms)
+            else:
+                if version is None:  # plain reference: current version
+                    mref = table._manifest()
+                    if mref is None:
+                        return None
+                    version = mref["version"]
+                    view = f"__lake_cur_{safe}_v{version}"
+                else:
+                    if isinstance(version, str):
+                        version = self._resolve_ref_version(
+                            table, version, ident)
+                    view = f"__lake_asof_{safe}_v{version}"
+                # a version-suffixed view's content is immutable: reuse
+                # a live pin instead of re-resolving the manifest (r11;
+                # a ref or the current version was resolved to a number
+                # by THIS statement, so a moved head never reuses a
+                # stale pin and isolation advances with every commit)
+                if self._reuse_view(view, fresh):
+                    return view
+                df = table.read_data(as_of_version=version)
+        except MergeSqlError:
+            raise
+        except ValueError as exc:
+            # expired/never-committed version, pre-first-commit
+            # timestamp — surface as a statement error
+            raise MergeSqlError(f"{what} on {ident!r}: {exc}") from None
+        df.createOrReplaceTempView(view)
+        self._track_asof_view(view, fresh)
+        return view
+
+    def _meta_view(self, ident: str, kind: str, version, ts_text,
+                   fresh: set) -> str | None:
+        """Pinned view of metadata table ``<ident>.<kind>``, or None
+        when ``ident`` names no registered table (MV, for
+        ``maintenance``) — the reference may then be a registered
+        table whose name ends in the suffix, or Spark's."""
+        norm = self._expand_ident(self._norm_ident(ident))  # USE <db>
+        pinned = version is not None or ts_text is not None
+        if kind == "maintenance":
+            # `<mv>.maintenance`: the streaming maintainer's persisted
+            # route counters (r11), addressed by the MV registry
+            if norm not in self._mvs:
+                return None
+            if pinned:
+                raise MergeSqlError(
+                    f"{ident}.maintenance is not version-scoped")
+            st = self._mvs[norm].maintenance_stats()
+            df = self.spark.createDataFrame([(
+                int(st["folded"]), int(st["fallback"]),
+                int(st["skipped"]), st["last_batch_id"],
+                st["last_route"], st["cursor"], st["updated_at_ms"])],
+                "folded long not null, fallback long not null, "
+                "skipped long not null, last_batch_id long, "
+                "last_route string, cursor long, updated_at_ms long")
+            view = "__lake_meta_" + re.sub(r"\W+", "_", norm) + "_maintenance"
+            df.createOrReplaceTempView(view)
+            self._track_asof_view(view, fresh)
+            return view
+        if norm not in self._tables:
+            return None
+        table = self._tables[norm]
+        if pinned and (ts_text is not None
+                       or kind not in ("files", "partitions")):
+            raise MergeSqlError(
+                f"{ident}.{kind} is table-global; VERSION AS OF "
+                "applies to .files / .partitions only")
+        if isinstance(version, str):
+            # quoted ref: resolve the tag/branch head to a version
+            version = self._resolve_ref_version(table, version, ident)
+        view = f"__lake_meta_{self._safe_name(norm, table)}_{kind}" + (
+            "" if version is None else f"_v{version}")
+        # version-PINNED metadata (files/partitions AS OF v) is
+        # immutable — reuse a live pin; version-free kinds track the
+        # current table and must re-register every statement
+        if version is not None and self._reuse_view(view, fresh):
+            return view
+        try:
+            df = table.metadata(kind, version)
+        except ValueError as exc:
+            raise MergeSqlError(
+                f"{ident}.{kind} VERSION AS OF {version}: {exc}") from None
+        df.createOrReplaceTempView(view)
+        self._track_asof_view(view, fresh)
+        return view
 
     @staticmethod
-    def _resolve_ref_version(table: ParquetLakeTable, lit: str,
+    def _resolve_ref_version(table: ParquetLakeTable, name: str,
                              ident: str) -> int:
-        """Version pinned by a QUOTED ref literal: a tag first, then a
-        branch head (Iceberg resolves VERSION AS OF names against the
-        shared refs namespace)."""
-        name = lit.strip()[1:-1].replace("''", "'")
+        """Version pinned by a quoted ref name in VERSION AS OF: a tag
+        first, then a branch head (Iceberg resolves VERSION AS OF names
+        against the shared refs namespace)."""
         try:
             return table.tag_version(name)
         except ValueError:
             version = table._read_pointer(table._ref_file(name))
             if version <= 0:
                 raise MergeSqlError(
-                    f"VERSION AS OF {lit}: no tag or branch named "
+                    f"VERSION AS OF {name!r}: no tag or branch named "
                     f"{name!r} on {ident!r}") from None
             return version
 
@@ -1076,8 +910,6 @@ class MergeSqlRunner:
         track the table it actually reads; two runners binding the same
         name to the SAME path still share pins, which is the intended
         cross-runner reuse."""
-        import hashlib
-
         tok = hashlib.md5(str(table.path).encode()).hexdigest()[:8]
         return re.sub(r"\W+", "_", norm) + "_" + tok
 
@@ -1224,69 +1056,38 @@ class MergeSqlRunner:
         return df.drop(*[c for c in (DELETED_COL, *hidden)
                          if c in df.columns])
 
-    @staticmethod
-    def _strip_alias(text: str, alias: str | None) -> str:
-        """Remove ``alias.`` prefixes OUTSIDE single-quoted string
-        literals only — a raw re.sub also rewrote matches inside
-        literals (alias ``t`` turned ``'http://t.co'`` into
-        ``'http://co'``, advisor finding r4). Splitting on ``'`` puts
-        literal text at odd indexes (SQL's escaped ``''`` just yields
-        an untouched empty segment)."""
-        if not alias:
-            return text
-        pat = re.compile(rf"\b{re.escape(alias)}\.", re.IGNORECASE)
-        return "'".join(
-            pat.sub("", seg) if i % 2 == 0 else seg
-            for i, seg in enumerate(text.split("'"))
-        )
-
-    @classmethod
-    def _where_expr(cls, cond: str | None, alias: str | None):
-        if cond is None:
-            return None
-        return F.expr(cls._strip_alias(cond, alias))
-
-    def _run_delete(self, statement: str) -> None:
+    def _run_delete(self, statement: str, plan) -> None:
         """``DELETE FROM t WHERE ...`` — Iceberg COW DELETE shape: the
         WHERE is pushed into the snapshot scan (partition/footer-stat
         pruning), matching rows merge as ``_op='delete'``, and the
         rewrite touches only partitions that actually hold matches
         (``merge``'s affected-partition probe)."""
-        m = _DELETE_RE.match(statement)
-        if not m:
-            raise MergeSqlError(
-                "unsupported DELETE; expected "
-                "DELETE FROM <t> [[AS] a] [WHERE <cond>]"
-            )
-        table = self._resolve(m.group("target"))
-        cond = self._where_expr(m.group("where"), m.group("alias"))
-        data = self._dml_state(table)
-        batch = data.filter(cond) if cond is not None else data
+        table, data, _ = self._dml_target(plan.table())
+        cond = plan.condition()
+        # no WHERE parses as the literal TRUE
+        if not (cond.nodeName() == "Literal" and cond.value() is True):
+            data = data.filter(F.expr(_text(statement, cond)))
         # a folded read is one row per key: merge skips the batch dedup
-        table._merge(batch.withColumn(OP_COL, F.lit("delete")),
+        table._merge(data.withColumn(OP_COL, F.lit("delete")),
                      one_per_key=True)
 
-    def _run_update(self, statement: str) -> None:
+    def _run_update(self, statement: str, plan) -> None:
         """``UPDATE t SET c = expr [, ...] WHERE ...`` — scans matching
         rows, applies every SET expression against the PRE-update row
         image (standard SQL: one select, not chained withColumn), and
         merges the full-row results as upserts. SET on a key column is
         rejected (a key rewrite is delete+insert — say it with MERGE)."""
-        m = _UPDATE_RE.match(statement)
-        if not m:
-            raise MergeSqlError(
-                "unsupported UPDATE; expected "
-                "UPDATE <t> [[AS] a] SET c = expr [, ...] [WHERE <cond>]"
-            )
-        table = self._resolve(m.group("target"))
-        alias = m.group("alias")
-        data = self._dml_state(table)
+        table, data, alias = self._dml_target(plan.table())
         assignments: dict[str, str] = {}
-        for piece in _split_top_level(m.group("set")):
-            am = re.match(r"^(\w+)\s*=\s*(.+)$", piece, re.DOTALL)
-            if not am:
-                raise MergeSqlError(f"bad SET assignment {piece!r}")
-            col = am.group(1)
+        for a in _seq(plan.assignments()):
+            key = _seq(a.key().nameParts())
+            if len(key) == 2 and key[0].lower() == alias.lower():
+                key = key[1:]
+            if len(key) != 1:
+                raise MergeSqlError(
+                    f"bad SET assignment target {'.'.join(key)!r}; SET "
+                    "names a top-level column")
+            col = key[0]
             matches = [c for c in data.columns if c.lower() == col.lower()]
             if not matches:
                 raise MergeSqlError(
@@ -1301,37 +1102,48 @@ class MergeSqlRunner:
                 )
             if col in assignments:
                 raise MergeSqlError(f"duplicate SET of column {col!r}")
-            rhs = self._strip_alias(am.group(2).strip(), alias)
-            assignments[col] = rhs
-        cond = self._where_expr(m.group("where"), alias)
-        matched = data.filter(cond) if cond is not None else data
+            assignments[col] = _text(statement, a.value())
+        cond = _opt(plan.condition())
+        if cond is not None:
+            data = data.filter(F.expr(_text(statement, cond)))
         new_cols = {
             c: F.expr(rhs).cast(data.schema[c].dataType).alias(c)
             for c, rhs in assignments.items()
         }
-        batch = matched.select(
+        batch = data.select(
             *[new_cols.get(c, F.col(c)) for c in data.columns]
         )
         table._merge(batch.withColumn(OP_COL, F.lit("upsert")),
                      one_per_key=True)
 
-    def _run_insert(self, statement: str) -> None:
+    def _dml_target(self, node):
+        """``(table, rows, alias)`` of an UPDATE/DELETE target: the
+        registered table and its live rows (:meth:`_dml_state`) aliased
+        as the statement aliases the target — or by the name's last
+        part, SQL's implicit qualifier — so WHERE and SET text resolves
+        verbatim."""
+        rel, alias = _aliased(node)
+        ident = _ident(rel)
+        alias = alias or ident[-1]
+        table = self._resolve(".".join(ident))
+        return table, self._dml_state(table).alias(alias), alias
+
+    def _run_insert(self, statement: str, plan) -> None:
         """``INSERT INTO t [(cols)] VALUES ... | SELECT ...`` — the
-        source evaluates as a standalone Spark query (``VALUES`` is a
-        valid Spark relation), conforms positionally to the declared
+        source evaluates as a standalone query (``VALUES`` is a valid
+        Spark relation), conforms positionally to the declared
         column list (or the table's full column order), casts to the
         declared types, and merges as upserts. Divergence from
         Iceberg's append-only INSERT, documented in the module
         docstring: duplicate keys resolve latest-wins, not duplicated."""
-        m = _INSERT_RE.match(statement)
-        if not m:
-            raise MergeSqlError(
-                "unsupported INSERT; expected "
-                "INSERT INTO <t> [(c1, ...)] VALUES (...) | SELECT ..."
-            )
-        table = self._resolve(m.group("target"))
-        batch = self._conform_insert_source(
-            table, m.group("cols"), m.group("src"))
+        if plan.byName() or plan.ifPartitionNotExists() or (
+                not plan.overwrite() and not plan.partitionSpec().isEmpty()):
+            raise self._unsupported(statement, "no BY NAME, IF NOT EXISTS "
+                                    "or INSERT INTO ... PARTITION")
+        if plan.overwrite():
+            return self._run_insert_overwrite(statement, plan)
+        table = self._resolve(".".join(_ident(plan.table())))
+        batch = self._conform_insert_source(table, statement, plan)
         if self.on_duplicate == "error":
             self._reject_duplicate_keys(table, batch)
         # statement-executed-now semantics: without a timestamp the
@@ -1344,20 +1156,22 @@ class MergeSqlRunner:
         table.merge(batch.withColumn(OP_COL, F.lit("upsert")))
 
     def _conform_insert_source(self, table: ParquetLakeTable,
-                               cols_text: str | None, src_sql: str,
+                               statement: str, plan,
                                inject: dict | None = None) -> DataFrame:
-        """Evaluate an INSERT source (VALUES literal or any Spark
-        SELECT), conform it positionally to the declared column list,
-        and cast to the declared types. ``inject`` maps columns the
-        source must NOT supply to constant values (the static
-        PARTITION clause of INSERT OVERWRITE)."""
+        """Evaluate an INSERT's source (VALUES literal or any query),
+        conform it positionally to the statement's column list (or the
+        table's columns), and cast to the declared types. The source
+        text is everything after the ``InsertIntoStatement`` node's own
+        span, which ends with the column list (the ``query`` child's
+        span drops the ``TABLE`` of a ``TABLE t`` source). ``inject``
+        maps columns the source must NOT supply to constant values (the
+        static PARTITION clause of INSERT OVERWRITE)."""
         inject = inject or {}
         data_schema = table.read_data().schema
         declared = data_schema.names
         supplied = [c for c in declared if c not in inject]
-        if cols_text:
-            cols = [c.replace("`", "").strip()
-                    for c in _split_top_level(cols_text)]
+        cols = _seq(plan.userSpecifiedCols())
+        if cols:
             lower = {c.lower(): c for c in declared}
             cols = [lower.get(c.lower(), c) for c in cols]
             unknown = sorted(set(cols) - set(declared))
@@ -1382,9 +1196,7 @@ class MergeSqlRunner:
         # through query(), not spark.sql: an INSERT source may pin a
         # time-travel read (INSERT INTO t SELECT * FROM t VERSION AS
         # OF 3 — the restore-a-version flow)
-        src = self.query(src_sql) if re.match(
-            r"^\s*SELECT\b", src_sql, re.IGNORECASE) \
-            else self.spark.sql(src_sql)
+        src = self.query(statement[plan.origin().stopIndex().get() + 1:])
         if len(src.columns) != len(cols):
             raise MergeSqlError(
                 f"INSERT source has {len(src.columns)} column(s), "
@@ -1397,7 +1209,7 @@ class MergeSqlRunner:
               for c in declared]
         )
 
-    def _run_insert_overwrite(self, statement: str) -> None:
+    def _run_insert_overwrite(self, statement: str, plan) -> None:
         """``INSERT OVERWRITE [TABLE] t [PARTITION (p = lit)] [(cols)]
         VALUES ... | SELECT ...`` — Iceberg's overwrite family, compiled
         onto the keyed merge plan (source rows merge as upserts; rows
@@ -1423,45 +1235,41 @@ class MergeSqlRunner:
         divergence, same as INSERT's: a source key that currently
         lives OUTSIDE the replaced scope is upserted (moved), not
         duplicated."""
-        m = _INSERT_OVERWRITE_RE.match(statement)
-        if not m:
-            raise MergeSqlError(
-                "unsupported INSERT OVERWRITE; expected INSERT OVERWRITE "
-                "[TABLE] <t> [PARTITION (p = <lit>)] [(c1, ...)] "
-                "VALUES (...) | SELECT ..."
-            )
-        table = self._resolve(m.group("target"))
+        ident = ".".join(_ident(plan.table()))
+        table = self._resolve(ident)
         pcol = table.partition_col
 
         def _need_identity(what: str) -> None:
             if pcol is None:
                 raise MergeSqlError(
                     f"{what} needs a partitioned table; "
-                    f"{m.group('target')!r} is unpartitioned")
+                    f"{ident!r} is unpartitioned")
             if table.partition_transform is not None:
                 raise MergeSqlError(
                     f"{what} needs an IDENTITY partition column; "
-                    f"{m.group('target')!r} partitions by a hidden "
+                    f"{ident!r} partitions by a hidden "
                     "transform — overwrite the whole table (static "
                     "mode) or express the replacement with MERGE")
 
         inject: dict = {}
-        if m.group("part"):
+        # Spark's partition spec: column -> literal value as a string
+        # (None for a dynamic `PARTITION (p)` entry)
+        spec = [(kv._1(), _opt(kv._2()))
+                for kv in _seq(plan.partitionSpec().toSeq())]
+        if spec:
             _need_identity("INSERT OVERWRITE PARTITION")
-            pm = re.match(r"^\s*([\w`]+)\s*=\s*(.+?)\s*$", m.group("part"),
-                          re.DOTALL)
-            if not pm:
+            if len(spec) != 1 or spec[0][1] is None:
                 raise MergeSqlError(
                     "PARTITION clause must be a single "
                     "<partition-col> = <literal>")
-            name = pm.group(1).replace("`", "")
+            name, value = spec[0]
             if name.lower() != pcol.lower():
                 raise MergeSqlError(
                     f"PARTITION column {name!r} is not the table's "
                     f"partition column {pcol!r}")
-            inject[pcol] = self._call_value(pm.group(2))
-        batch = self._conform_insert_source(
-            table, m.group("cols"), m.group("src"), inject=inject)
+            inject[pcol] = value
+        batch = self._conform_insert_source(table, statement, plan,
+                                            inject=inject)
         if self.on_duplicate == "error":
             self._reject_batch_duplicates(table, batch)
 
@@ -1518,17 +1326,12 @@ class MergeSqlRunner:
         table.merge(batch.withColumn(OP_COL, F.lit("upsert"))
                     .unionByName(gone, allowMissingColumns=True))
 
-    def _run_truncate(self, statement: str) -> None:
+    def _run_truncate(self, statement: str, plan) -> None:
         """``TRUNCATE TABLE t`` — every live row merges as a delete
         (Iceberg's TRUNCATE: data removed, history and schema kept;
         prior snapshots stay time-travelable until expire)."""
-        m = _TRUNCATE_RE.match(statement)
-        if not m:
-            raise MergeSqlError(
-                "unsupported TRUNCATE; expected TRUNCATE TABLE <t>")
-        table = self._resolve(m.group("target"))
-        table._merge(self._dml_state(table)
-                     .withColumn(OP_COL, F.lit("delete")),
+        table, data, _ = self._dml_target(plan.child())
+        table._merge(data.withColumn(OP_COL, F.lit("delete")),
                      one_per_key=True)
 
     def _reject_batch_duplicates(self, table: ParquetLakeTable,
@@ -2028,27 +1831,18 @@ class MergeSqlRunner:
 
     # -- SHOW TABLES / DESCRIBE (registry-served catalog surface) --------
 
-    def _run_explain(self, statement: str) -> DataFrame:
-        """``EXPLAIN [EXTENDED|FORMATTED|CODEGEN|COST] <SELECT ...>``
-        — the inner statement runs through the same rewrites
-        :meth:`query` applies (time travel, metadata tables,
-        registered refs, CTE precedence), then Spark explains the
-        REWRITTEN text: the plan a user inspects is the plan the
-        engine executes, in Spark's own output shape (one ``plan``
-        string column)."""
-        m = re.match(
-            r"^\s*EXPLAIN\s+"
-            r"(?P<mode>(?:EXTENDED|FORMATTED|CODEGEN|COST)\s+)?"
-            r"(?P<inner>(?:SELECT|WITH)\b.+?)\s*;?\s*$",
-            statement, re.IGNORECASE | re.DOTALL)
-        if not m:
-            raise MergeSqlError(
-                "unsupported EXPLAIN; expected EXPLAIN [EXTENDED|"
-                "FORMATTED|CODEGEN|COST] SELECT ...")
-        mode = (m.group("mode") or "").strip()
-        return self.spark.sql(
-            f"EXPLAIN {mode + ' ' if mode else ''}"
-            f"{self._rewrite(m.group('inner'))}")
+    def _run_explain(self, statement: str, plan) -> DataFrame:
+        """``EXPLAIN [EXTENDED|FORMATTED|CODEGEN|COST] <query>`` — the
+        inner query gets the same rewrites :meth:`query` applies (time
+        travel, metadata tables, registered refs, CTE precedence), then
+        Spark explains the REWRITTEN statement: the plan a user inspects
+        is the plan the engine executes, in Spark's own output shape
+        (one ``plan`` string column)."""
+        if self._is_command(plan.logicalPlan()):
+            raise self._unsupported(
+                statement, "EXPLAIN takes a query, not "
+                f"{plan.logicalPlan().nodeName()}")
+        return self.spark.sql(self._rewrite(statement, plan))
 
     def _run_show(self, statement: str) -> DataFrame:
         """``SHOW TABLES [IN|FROM <db>] [LIKE '<pat>']`` answered from
@@ -2418,8 +2212,8 @@ class MergeSqlRunner:
                     # as an "expression" and fail only inside the
                     # initial fold, after state was written (r10
                     # self-review)
-                    # scan with string literals MASKED (the _strip_alias
-                    # odd/even split): a quoted ')' or a quoted
+                    # scan with string literals MASKED (an odd/even
+                    # split on quotes): a quoted ')' or a quoted
                     # 'min(' is data, not structure — the raw-text
                     # scan falsely rejected SUM(instr(note, ')'))
                     masked = "'".join(
@@ -2756,38 +2550,44 @@ class MergeSqlRunner:
 
     # -- pieces ----------------------------------------------------------
 
-    def _check_on(self, on: str, table: ParquetLakeTable,
-                  talias: str, salias: str) -> None:
+    @staticmethod
+    def _check_on(statement: str, on, table: ParquetLakeTable,
+                  talias: str, salias: str | None) -> None:
+        """The ON condition must AND together ``s.k = t.k`` equalities
+        (one qualifier per side) covering exactly the key columns."""
+        quals = {talias.lower(), (salias or "").lower()}
         keys = set()
-        for part in re.split(r"\s+AND\s+", on, flags=re.IGNORECASE):
-            eq = re.match(
-                rf"^\s*(?:{salias}|{talias})\.(\w+)\s*=\s*"
-                rf"(?:{salias}|{talias})\.(\w+)\s*$",
-                part, re.IGNORECASE,
-            )
-            if not eq or eq.group(1).lower() != eq.group(2).lower():
+        for part in _conjuncts(on):
+            sides = [_seq(c.nameParts()) for c in _seq(part.children())
+                     if c.nodeName() == "UnresolvedAttribute"]
+            if (part.nodeName() != "EqualTo" or len(sides) != 2
+                    or any(len(x) != 2 or x[0].lower() not in quals
+                           for x in sides)
+                    or sides[0][0].lower() == sides[1][0].lower()
+                    or sides[0][1].lower() != sides[1][1].lower()):
                 raise MergeSqlError(
-                    f"ON must be key equalities s.k = t.k; got {part!r}"
-                )
-            keys.add(eq.group(1))
-        if keys != set(table.key_cols):
+                    f"ON must be key equalities s.k = t.k; got "
+                    f"{_text(statement, part)!r}")
+            keys.add(sides[0][1].lower())
+        if keys != {k.lower() for k in table.key_cols}:
             raise MergeSqlError(
                 f"ON keys {sorted(keys)} != table key_cols "
                 f"{sorted(table.key_cols)}"
             )
 
-    @classmethod
-    def _src_condition(cls, cond: str | None, salias: str, talias: str):
+    @staticmethod
+    def _src_condition(statement: str, cond, talias: str):
+        """A clause condition as a Column over the aliased source; a
+        column qualified by the target alias is rejected."""
         if cond is None:
             return None
-        # target-alias scan runs on the quote-stripped text so a URL or
-        # prose literal containing "t." can't false-positive
-        outside = " ".join(cond.split("'")[::2])
-        if re.search(rf"\b{re.escape(talias)}\.", outside, re.IGNORECASE):
-            raise MergeSqlError(
-                "clause conditions may reference source columns only "
-                f"(the engine's latest-wins merge already orders against "
-                f"the target); got {cond!r}"
-            )
-        return F.expr(cls._strip_alias(cond, salias))
-
+        for node in _expr_nodes(cond):
+            if node.nodeName() == "UnresolvedAttribute":
+                parts = _seq(node.nameParts())
+                if len(parts) > 1 and parts[0].lower() == talias.lower():
+                    raise MergeSqlError(
+                        "clause conditions may reference source columns "
+                        "only (the engine's latest-wins merge already "
+                        "orders against the target); got "
+                        f"{_text(statement, cond)!r}")
+        return F.expr(_text(statement, cond))
