@@ -832,7 +832,6 @@ def test_stream_arrow_emission_equals_row_emission(spark, tmp_path):
              .option("path", table.path).option("keys", "trans_id")
              .option("partitionCol", "event")
              .option("includePreimages", "true")
-             .option("emitSpan", "true")
              .option("arrowEmit", "true" if arrow else "false")
              .load()
              .writeStream.foreachBatch(

@@ -1692,6 +1692,15 @@ def test_query_rewrites_are_literal_and_context_safe(spark, runner):
                 "FROM demo.cdc_db.retail_trans VERSION AS OF 1 "
                 "WHERE retail_trans.trans_id = 1").collect()
     assert [x["amount"] for x in q] == [10]
+    # ...and after a TABLESAMPLE clause, where Spark's grammar wants
+    # the implicit alias (percent and ROWS forms, and a time-travel
+    # reference)
+    for clause, n in (("TABLESAMPLE (100 PERCENT)", 3),
+                      ("TABLESAMPLE (2 ROWS)", 2),
+                      ("VERSION AS OF 1 TABLESAMPLE (100 PERCENT)", 3)):
+        got = r.query("SELECT count(retail_trans.trans_id) AS n "
+                      f"FROM demo.cdc_db.retail_trans {clause}").collect()
+        assert got[0]["n"] == n, clause
     shutil.rmtree(h.path, ignore_errors=True)
 
 

@@ -159,7 +159,7 @@ the grammar)::
                    (metadata tables; files/partitions take an optional
                    VERSION AS OF pin)
                ... FROM mv.maintenance  (streaming-maintainer route
-                   counters — folded/fallback/skipped — from the
+                   counters — folded/skipped — from the
                    persisted sidecar, r11)
         (``query()``; SYSTEM_VERSION / SYSTEM_TIME accepted — the
         Iceberg-Spark AND Athena time-travel read spellings, resolved
@@ -706,10 +706,12 @@ class MergeSqlRunner:
         edits = []
         fresh: set = set()
 
-        def visit(node, aliased: bool, ctes: frozenset) -> None:
+        def visit(node, aliased: bool, ctes: frozenset,
+                  alias_at: int | None = None) -> None:
             name = node.nodeName()
             if name in ("UnresolvedRelation", "RelationTimeTravel"):
-                edits.append(self._pin(statement, node, aliased, ctes, fresh))
+                edits.extend(self._pin(statement, node, aliased, ctes,
+                                       fresh, alias_at) or ())
                 return
             if name == "ExplainCommand":
                 visit(node.logicalPlan(), True, ctes)
@@ -720,27 +722,37 @@ class MergeSqlRunner:
                 for cte in _seq(node.cteRelations()):
                     visit(cte._2(), True, ctes)
                     ctes = ctes | {cte._1().lower()}
+            # a sample clause (``t TABLESAMPLE (...)``; its ROWS form
+            # parses to limits) sits between a relation and its alias
+            sample_stop = None
+            if name == "Sample" or (
+                    name in ("GlobalLimit", "LocalLimit")
+                    and _text(statement, node).upper().startswith(
+                        "TABLESAMPLE")):
+                sample_stop = node.origin().stopIndex().get() + 1
             for child in _seq(node.children()):
-                visit(child, name == "SubqueryAlias", ctes)
+                visit(child, name == "SubqueryAlias", ctes, sample_stop)
             for sub in _seq(node.subqueries()):
                 visit(sub, False, ctes)
 
         # a relation that is the whole query (``TABLE t``) takes no alias
         visit(plan, True, frozenset())
-        for start, stop, view in sorted(filter(None, edits), reverse=True):
+        for start, stop, view in sorted(edits, reverse=True):
             statement = statement[:start] + view + statement[stop:]
         return statement
 
     def _pin(self, statement: str, node, aliased: bool, ctes: frozenset,
-             fresh: set):
-        """``(start, stop, view)`` replacing one relation of a query
-        by its pinned view, or None when the relation is not this
-        runner's (unregistered, CTE-bound, or no committed snapshot).
-        ``node`` is an ``UnresolvedRelation`` or a
+             fresh: set, alias_at: int | None = None):
+        """``[(start, stop, text), ...]`` edits replacing one relation
+        of a query by its pinned view, or None when the relation is
+        not this runner's (unregistered, CTE-bound, or no committed
+        snapshot). ``node`` is an ``UnresolvedRelation`` or a
         ``RelationTimeTravel`` — a leaf whose identifier is in its
         ``relation`` field and whose own span covers only the ``[FOR]
         VERSION|TIMESTAMP AS OF`` clause, so the replaced span runs
-        from the identifier to the clause's end."""
+        from the identifier to the clause's end. An implicit alias
+        goes right after the view, or at ``alias_at`` (the end of a
+        TABLESAMPLE clause, which Spark's grammar puts first)."""
         travel = node if node.nodeName() == "RelationTimeTravel" else None
         rel = node if travel is None else node.relation()
         if rel.nodeName() != "UnresolvedRelation":
@@ -771,10 +783,13 @@ class MergeSqlRunner:
                 return None  # not ours (Spark may resolve it) or no snapshot
         start = rel.origin().startIndex().get()
         stop = node.origin().stopIndex().get() + 1
-        if not aliased:
-            # SQL's implicit qualifier: the original name's last part
-            view += " `" + parts[-1].replace("`", "``") + "`"
-        return start, stop, view
+        if aliased:
+            return [(start, stop, view)]
+        # SQL's implicit qualifier: the original name's last part
+        alias = " `" + parts[-1].replace("`", "``") + "`"
+        if alias_at is None:
+            return [(start, stop, view + alias)]
+        return [(start, stop, view), (alias_at, alias_at, alias)]
 
     def _table_view(self, ident: str, version, ts_text,
                     fresh: set) -> str | None:
@@ -845,12 +860,12 @@ class MergeSqlRunner:
                     f"{ident}.maintenance is not version-scoped")
             st = self._mvs[norm].maintenance_stats()
             df = self.spark.createDataFrame([(
-                int(st["folded"]), int(st["fallback"]),
-                int(st["skipped"]), st["last_batch_id"],
-                st["last_route"], st["cursor"], st["updated_at_ms"])],
-                "folded long not null, fallback long not null, "
-                "skipped long not null, last_batch_id long, "
-                "last_route string, cursor long, updated_at_ms long")
+                int(st["folded"]), int(st["skipped"]),
+                st["last_batch_id"], st["last_route"], st["cursor"],
+                st["updated_at_ms"])],
+                "folded long not null, skipped long not null, "
+                "last_batch_id long, last_route string, cursor long, "
+                "updated_at_ms long")
             view = "__lake_meta_" + re.sub(r"\W+", "_", norm) + "_maintenance"
             df.createOrReplaceTempView(view)
             self._track_asof_view(view, fresh)

@@ -12,6 +12,11 @@ the manual engine the same API shape::
         .option("partitionCol", "event")      # omit for unpartitioned
         .load())
 
+``format("lake-versions")`` streams the offsets alone: one
+``(from_version, to_version)`` row per micro-batch and no change rows,
+for consumers that fold a span from the table itself
+(``StreamingRollupMaintainer``).
+
 Offsets are table VERSIONS (one micro-batch spans every commit between
 two polls — snapshot diffs coalesce, same as ChangeFeed.poll). The
 split of work is per PARTITION VALUE whose file set changed between
@@ -112,6 +117,12 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql import types as T
 
+from .. import fsutil
+
+#: table path -> ``(pyarrow.fs.FileSystem, root)``: the engine's one
+#: path grammar (``subtree:<base>!<rel>``, ``scheme://...``, local)
+_fs_and_root = fsutil.fs_and_root
+
 _ALL = "__ALL__"
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 LINEAGE = ("_op_timestamp", "_txn_id", "_deleted")
@@ -191,23 +202,6 @@ def move_cap_events(path: str) -> list:
 # -- filesystem + manifest access without a SparkSession ---------------------
 # (driver AND executors — the Python Data Source contract gives tasks no
 # SparkSession, so this must be self-contained: stdlib + pyarrow only)
-
-
-def _fs_and_root(path: str):
-    """Resolve the table path to ``(pyarrow.fs.FileSystem, root)`` —
-    shared grammar in :mod:`..fsutil` since r12 (the vector index
-    needed the identical resolution; one definition, two callers).
-
-    - ``subtree:<base>!<rel>`` — chroot wrapper over the local FS;
-      paths handed to the fs are RELATIVE to ``base``, so any stray
-      ``os.*`` call on them breaks loudly (the test seam, and the
-      shape an object-store bucket mount takes);
-    - ``scheme://...`` — whatever ``FileSystem.from_uri`` supports;
-    - anything else — the local filesystem.
-    """
-    from ..fsutil import fs_and_root
-
-    return fs_and_root(path)
 
 
 def _read_text(path: str, *parts: str) -> str:
@@ -378,8 +372,7 @@ class _PartDiff(InputPartition):
     relabeling (module docstring, cross-partition key moves)."""
 
     def __init__(self, part, old_layers, new_layers, renames=(),
-                 fill_col=None, move_new=(), move_old=(), span=(0, 0),
-                 degraded=False):
+                 fill_col=None, move_new=(), move_old=(), degraded=False):
         self.part = part
         self.old_layers = old_layers
         self.new_layers = new_layers
@@ -393,12 +386,6 @@ class _PartDiff(InputPartition):
         #: surface its newly-won tombstones for never-lived keys (r9:
         #: membership may not degrade, only labels/images may)
         self.degraded = degraded
-        #: the batch's (from_version, to_version) offsets — surfaced
-        #: as ``_span_from``/``_span_to`` columns under ``emitSpan``
-        #: (r9, the streaming-IVM handshake: diffs COALESCE commits,
-        #: so per-row commit attribution doesn't exist; the span is
-        #: the honest granularity)
-        self.span = tuple(span)
 
 
 class LakeChangeStreamReader(DataSourceStreamReader):
@@ -411,23 +398,13 @@ class LakeChangeStreamReader(DataSourceStreamReader):
         hidden = options.get("hiddenpartition", "false").lower() == "true"
         #: Iceberg changelog-view shape (r9): emit paired
         #: ``update_preimage`` rows alongside every update — what a
-        #: signed-delta consumer (StreamingRollupMaintainer) needs to
-        #: SUBTRACT the old image without re-reading the table
+        #: signed-delta consumer needs to SUBTRACT the old image
+        #: without re-reading the table
         self.include_preimages = _opt_bool(options, "includepreimages",
                                            "includePreimages")
-        #: append the batch's (from, to) version offsets as
-        #: ``_span_from``/``_span_to`` columns (Delta CDF's
-        #: _commit_version, at the span granularity diffs coalesce to)
-        self.emit_span = _opt_bool(options, "emitspan", "emitSpan")
         self.columns, self.change_schema = _resolve_schema(
             self.path, self.partition_col if hidden else None
         )
-        if self.emit_span:
-            self.change_schema = T.StructType(
-                self.change_schema.fields
-                + [T.StructField("_span_from", T.LongType()),
-                   T.StructField("_span_to", T.LongType()),
-                   T.StructField("_span_degraded", T.BooleanType())])
         #: committed delta dirs are immutable — one listing per dir
         #: ever, only for manifests predating the delta_files entry
         self._delta_cache: dict[str, dict] = {}
@@ -617,7 +594,7 @@ class LakeChangeStreamReader(DataSourceStreamReader):
     def partitions(self, start: dict, end: dict):
         lo, hi = start["version"], end["version"]
         if hi <= lo:
-            return [_PartDiff(_ALL, [], [], span=(lo, hi))]  # empty batch
+            return [_PartDiff(_ALL, [], [])]  # empty batch
         new_m = self._offset_manifest(hi)
         old_m = None if lo == 0 else self._offset_manifest(lo)
         renames = new_m.get("renames", [])
@@ -637,7 +614,7 @@ class LakeChangeStreamReader(DataSourceStreamReader):
                 continue
             changed.append(ns)
         if not changed:
-            return [_PartDiff(_ALL, [], [], span=(lo, hi))]
+            return [_PartDiff(_ALL, [], [])]
 
         # cross-partition move resolution (r6): hand each task the
         # stacks of OTHER partitions whose stored key ranges overlap
@@ -713,8 +690,7 @@ class LakeChangeStreamReader(DataSourceStreamReader):
             _PartDiff(ns[1], old_map.get(ns, []), new_map.get(ns, []),
                       renames, fill_col=ns[0],
                       move_new=moves_n.get(ns, ()),
-                      move_old=moves_o.get(ns, ()), span=(lo, hi),
-                      degraded=degraded)
+                      move_old=moves_o.get(ns, ()), degraded=degraded)
             for ns in changed
         ])
 
@@ -748,8 +724,7 @@ class LakeChangeStreamReader(DataSourceStreamReader):
             for i in range(0, len(files), step):
                 out.append(_PartDiff(
                     d.part, d.old_layers, [(seq, files[i:i + step])],
-                    d.renames, fill_col=d.fill_col, span=d.span,
-                    degraded=d.degraded))
+                    d.renames, fill_col=d.fill_col, degraded=d.degraded))
         return out
 
     def _flag_move_cap(self, lo: int, hi: int, reason: str, *,
@@ -809,22 +784,9 @@ class LakeChangeStreamReader(DataSourceStreamReader):
     # -- per-task diff (executor-side, pyarrow/pandas only) ---------------
 
     def read(self, partition: _PartDiff):
-        """Emit the partition task's change rows, plus the optional
-        ``emitSpan`` offset columns. Row shape must match
-        ``change_schema`` field order: data columns, ``_change_type``,
-        then (when enabled) ``_span_from``/``_span_to``/
-        ``_span_degraded``.
-
-        ``_span_degraded`` (r10, advisor finding): True when the
-        planner relaxed move resolution for this batch (cap tripped).
-        A degraded batch may carry spurious or relabeled rows that
-        are no-ops only for KEYED consumers — a signed-delta consumer
-        (StreamingRollupMaintainer) is not keyed and must route such
-        spans to its exact polling fallback. The flag rides every row
-        of the batch (span-granular, like the offsets) because the
-        sidecar events under ``_stream_metrics/`` are best-effort —
-        a read-only filesystem downgrades them to log-only, which is
-        not an acceptable delivery channel for a correctness signal.
+        """Emit the partition task's change rows. Row shape matches
+        ``change_schema`` field order: data columns, then
+        ``_change_type``.
 
         Emission is Arrow-native by default (r10): the one-sided
         pandas frames become RecordBatches via per-COLUMN conversion
@@ -838,12 +800,8 @@ class LakeChangeStreamReader(DataSourceStreamReader):
         path, and after that point salvages per-chunk / per-file
         through the per-value converters (Spark's Python Data Source
         contract forbids mixing tuples after a RecordBatch)."""
-        tail = (tuple(int(v) for v in partition.span)
-                + (bool(partition.degraded),)) if self.emit_span \
-            else ()
         if not self.arrow_emit:
-            for row in self._diff_rows(partition):
-                yield row + tail
+            yield from self._diff_rows(partition)
             return
         if (not any(fl for _s, fl in partition.old_layers)
                 and not partition.move_new and not partition.move_old
@@ -855,7 +813,7 @@ class LakeChangeStreamReader(DataSourceStreamReader):
             # Spark file by file with no pandas and no per-row Python
             # at all; a layered (MOR) stack or a schema-level gate
             # returns None and takes the general path below.
-            boot = self._arrow_bootstrap(partition, tail)
+            boot = self._arrow_bootstrap(partition)
             if boot is not None:
                 yield from boot
                 return
@@ -863,7 +821,7 @@ class LakeChangeStreamReader(DataSourceStreamReader):
         rows = list(self._diff_rows(partition, frames_out=frames))
         if not rows and not frames:
             return
-        stream = self._arrow_batches(rows, frames, partition, tail)
+        stream = self._arrow_batches(rows, frames, partition)
         first = None
         if stream is not None:
             try:
@@ -883,16 +841,14 @@ class LakeChangeStreamReader(DataSourceStreamReader):
         # fallback: the exact row path (nothing was yielded yet, so
         # the task re-emits whole through Spark's tuple converters)
         dtypes = {f.name: f.dataType for f in self.change_schema.fields}
-        for row in rows:
-            yield row + tail
+        yield from rows
         for fr, side, kind in frames:
-            for row in self._emit_one_sided(fr, side, kind, dtypes,
-                                            partition.renames):
-                yield row + tail
+            yield from self._emit_one_sided(fr, side, kind, dtypes,
+                                            partition.renames)
 
     # -- Arrow-native emission (r10; lazy + salvageable r11) ---------------
 
-    def _arrow_batches(self, rows, frames, partition, tail):
+    def _arrow_batches(self, rows, frames, partition):
         """GENERATOR of one task's output as ``pyarrow.RecordBatch``es
         — or None when schema setup fails (the caller then re-emits
         through the exact row path). Schema comes from the same
@@ -913,10 +869,9 @@ class LakeChangeStreamReader(DataSourceStreamReader):
             pa_schema = to_arrow_schema(self.change_schema)
         except _conv_errors():
             return None
-        return self._batch_stream(rows, frames, partition, tail,
-                                  pa_schema)
+        return self._batch_stream(rows, frames, partition, pa_schema)
 
-    def _batch_stream(self, rows, frames, partition, tail, pa_schema):
+    def _batch_stream(self, rows, frames, partition, pa_schema):
         chunk = 65536  # bound per-IPC-message memory
         for i in range(0, len(rows), chunk):
             # no finer-grained salvage exists for resolved tuples —
@@ -924,16 +879,14 @@ class LakeChangeStreamReader(DataSourceStreamReader):
             # first batch routes the task to row emission (caller's
             # prefetch), later ones fail the task like the worker's
             # own converter would
-            yield self._rows_batch(rows[i:i + chunk], pa_schema, tail,
-                                   partition.renames)
+            yield self._rows_batch(rows[i:i + chunk], pa_schema)
         dtypes = {f.name: f.dataType for f in self.change_schema.fields}
         for fr, side, kind in frames:
             for i in range(0, len(fr), chunk):
                 piece = fr.iloc[i:i + chunk]
                 try:
                     yield self._frame_batch(piece, side, kind,
-                                            pa_schema, tail,
-                                            partition.renames)
+                                            pa_schema, partition.renames)
                 except _conv_errors() as exc:
                     _log.warning(
                         "lake-changes: vectorized conversion failed "
@@ -944,9 +897,9 @@ class LakeChangeStreamReader(DataSourceStreamReader):
                         list(self._emit_one_sided(
                             piece, side, kind, dtypes,
                             partition.renames)),
-                        pa_schema, tail, partition.renames)
+                        pa_schema)
 
-    def _arrow_bootstrap(self, partition, tail):
+    def _arrow_bootstrap(self, partition):
         """GENERATOR of RecordBatches for a pure-insert task over a
         SINGLE-layer stack (the COW bootstrap — the r9 verdict's one
         measured scale ceiling): each parquet file goes pyarrow ->
@@ -997,10 +950,10 @@ class LakeChangeStreamReader(DataSourceStreamReader):
                 partition.part, exc)
             return None
         return self._bootstrap_stream(layers[0][1], fs, pa_schema,
-                                      dtypes, fill_col, partition, tail)
+                                      dtypes, fill_col, partition)
 
     def _bootstrap_stream(self, files, fs, pa_schema, dtypes, fill_col,
-                          partition, tail):
+                          partition):
         """Per-file driver of the columnar bootstrap: each file's
         batches are FULLY built, then yielded — a conversion failure
         mid-file can never half-emit the file, so the per-file
@@ -1008,18 +961,18 @@ class LakeChangeStreamReader(DataSourceStreamReader):
         for f in files:
             try:
                 batches = self._bootstrap_file_batches(
-                    f, fs, pa_schema, dtypes, fill_col, partition, tail)
+                    f, fs, pa_schema, dtypes, fill_col, partition)
             except _conv_errors() as exc:
                 _log.warning(
                     "lake-changes: columnar bootstrap failed for file "
                     "%r of partition %r (%s); salvaging this file "
                     "per-value", f, partition.part, exc)
                 batches = self._bootstrap_file_salvage(
-                    f, pa_schema, dtypes, fill_col, partition, tail)
+                    f, pa_schema, dtypes, fill_col, partition)
             yield from batches
 
     def _bootstrap_file_batches(self, f, fs, pa_schema, dtypes,
-                                fill_col, partition, tail) -> list:
+                                fill_col, partition) -> list:
         """One parquet file -> fully-built RecordBatch list, columnar
         end to end (the r10 loop body, per-file)."""
         import pyarrow as pa
@@ -1074,14 +1027,11 @@ class LakeChangeStreamReader(DataSourceStreamReader):
         nd = len(self.columns)
         arrays.append(pa.array(["insert"] * n,
                                type=pa_schema.field(nd).type))
-        for j, tv in enumerate(tail):
-            arrays.append(pa.array(
-                [tv] * n, type=pa_schema.field(nd + 1 + j).type))
         tbl = pa.Table.from_arrays(arrays, schema=pa_schema)
         return tbl.to_batches(max_chunksize=65536)
 
     def _bootstrap_file_salvage(self, f, pa_schema, dtypes, fill_col,
-                                partition, tail) -> list:
+                                partition) -> list:
         """Exact re-emission of ONE bootstrap file whose vectorized
         conversion failed: pandas load (tombstone winners dropped,
         renames/partition token resolved by ``_load_state`` exactly
@@ -1100,8 +1050,7 @@ class LakeChangeStreamReader(DataSourceStreamReader):
         rows = list(self._emit_one_sided(fr, "_new", "insert", dtypes,
                                          partition.renames))
         chunk = 65536
-        return [self._rows_batch(rows[i:i + chunk], pa_schema, tail,
-                                 partition.renames)
+        return [self._rows_batch(rows[i:i + chunk], pa_schema)
                 for i in range(0, len(rows), chunk)]
 
     def _pa_array(self, vals, field, spark_t):
@@ -1119,24 +1068,17 @@ class LakeChangeStreamReader(DataSourceStreamReader):
             vals = [conv(v) for v in vals]
         return pa.array(vals, type=field.type, from_pandas=True)
 
-    def _rows_batch(self, rows, pa_schema, tail, renames):
+    def _rows_batch(self, rows, pa_schema):
         """RecordBatch from resolved per-row tuples (data columns +
         ``_change_type``; values already _coerce'd plain Python)."""
         import pyarrow as pa
 
-        n, nd = len(rows), len(self.columns)
-        arrays = []
-        for i, field in enumerate(pa_schema):
-            if i <= nd:  # data columns, then _change_type at nd
-                arrays.append(self._pa_array(
-                    [r[i] for r in rows], field,
-                    self.change_schema[i].dataType))
-            else:
-                arrays.append(pa.array([tail[i - nd - 1]] * n,
-                                       type=field.type))
+        arrays = [self._pa_array([r[i] for r in rows], field,
+                                 self.change_schema[i].dataType)
+                  for i, field in enumerate(pa_schema)]
         return pa.RecordBatch.from_arrays(arrays, schema=pa_schema)
 
-    def _frame_batch(self, frame, side, kind, pa_schema, tail, renames):
+    def _frame_batch(self, frame, side, kind, pa_schema, renames):
         """RecordBatch from a one-sided pandas frame — per-COLUMN
         conversion: scalar columns go pandas -> arrow at C speed with
         a SAFE cast to the declared type (the cast raises on anything
@@ -1171,9 +1113,6 @@ class LakeChangeStreamReader(DataSourceStreamReader):
                 arrays.append(arr)
         nd = len(self.columns)
         arrays.append(pa.array([kind] * n, type=pa_schema.field(nd).type))
-        for j, tv in enumerate(tail):
-            arrays.append(pa.array([tv] * n,
-                                   type=pa_schema.field(nd + 1 + j).type))
         return pa.RecordBatch.from_arrays(arrays, schema=pa_schema)
 
     def _diff_rows(self, partition: _PartDiff, frames_out: list | None = None):
@@ -1999,23 +1938,73 @@ class LakeChangeDataSource(DataSource):
                            "hiddenPartition")
         pcol = (self.options.get("partitioncol")
                 or self.options.get("partitionCol"))
-        s = _resolve_schema(self.options["path"],
-                            pcol if hidden else None)[1]
-        if _opt_bool(self.options, "emitspan", "emitSpan"):
-            s = T.StructType(s.fields
-                             + [T.StructField("_span_from", T.LongType()),
-                                T.StructField("_span_to", T.LongType()),
-                                T.StructField("_span_degraded",
-                                              T.BooleanType())])
-        return s
+        return _resolve_schema(self.options["path"],
+                               pcol if hidden else None)[1]
 
     def streamReader(self, schema) -> LakeChangeStreamReader:
         return LakeChangeStreamReader(self.options)
 
 
+class _VersionSpan(InputPartition):
+    """One micro-batch of ``lake-versions``: its offset range."""
+
+    def __init__(self, lo: int, hi: int) -> None:
+        self.lo = lo
+        self.hi = hi
+
+
+class _LakeVersionStreamReader(DataSourceStreamReader):
+    """Offsets are table versions, exactly as in
+    :class:`LakeChangeStreamReader`; each batch plans one partition and
+    emits one row ``(from_version, to_version)`` — or none when the
+    span is empty. Nothing is read but the ``CURRENT`` pointer."""
+
+    def __init__(self, options: dict) -> None:
+        self.path = options["path"]
+        self.initial = options.get("initial", "earliest")
+
+    def initialOffset(self) -> dict:
+        if self.initial == "latest":
+            return {"version": _current_version(self.path)}
+        return {"version": 0}
+
+    def latestOffset(self) -> dict:
+        return {"version": _current_version(self.path)}
+
+    def partitions(self, start: dict, end: dict):
+        return [_VersionSpan(start["version"], end["version"])]
+
+    def read(self, partition: _VersionSpan):
+        if partition.hi > partition.lo:
+            yield (partition.lo, partition.hi)
+
+    def commit(self, end: dict) -> None:
+        pass
+
+
+class _LakeVersionDataSource(DataSource):
+    """``format("lake-versions")``: the table's version spans as a
+    replayable stream — one ``(from_version, to_version)`` row per
+    micro-batch, no change rows. Options: ``path`` and ``initial``
+    (``earliest`` | ``latest``). A consumer that folds a span from the
+    table itself (the streaming rollup maintainer) needs only these
+    offsets; its idempotent sink makes the loop exactly-once."""
+
+    @classmethod
+    def name(cls) -> str:
+        return "lake-versions"
+
+    def schema(self):
+        return "from_version long, to_version long"
+
+    def streamReader(self, schema) -> _LakeVersionStreamReader:
+        return _LakeVersionStreamReader(self.options)
+
+
 def register_lake_stream(spark) -> None:
-    """Make ``format("lake-changes")`` available in this session from
-    any caller, including source-checkout users outside the repo.
+    """Make ``format("lake-changes")`` and ``format("lake-versions")``
+    available in this session from any caller, including
+    source-checkout users outside the repo.
 
     Spark ships a Python data source to its planning/reading workers
     by CLOUDPICKLING the class; a module-level class pickles by
@@ -2024,10 +2013,14 @@ def register_lake_stream(spark) -> None:
     by the package-boundary drive). Registering this module for
     BY-VALUE pickling makes the payload self-contained: everything it
     needs at unpickle time is stdlib + pyspark, with pandas/pyarrow
-    imported lazily inside ``read``."""
+    imported lazily inside ``read``. The shared path grammar
+    (:mod:`..fsutil`) rides by value too: an import of it inside a
+    worker would need the package."""
     import sys
 
     from pyspark import cloudpickle
 
     cloudpickle.register_pickle_by_value(sys.modules[__name__])
+    cloudpickle.register_pickle_by_value(fsutil)
     spark.dataSource.register(LakeChangeDataSource)
+    spark.dataSource.register(_LakeVersionDataSource)
