@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
@@ -228,11 +229,25 @@ def test_streaming_two_wave_golden(spark, tmp_path):
     assert _state(table) == fixtures.expected_final_state()
 
 
+def _data_files(table) -> list[str]:
+    return [os.path.join(table.path, r["dirname"], r["relpath"])
+            for r in table.metadata("files").collect()]
+
+
+def _codecs(path: str) -> set[str]:
+    md = pq.ParquetFile(path).metadata
+    return {md.row_group(i).column(j).compression
+            for i in range(md.num_row_groups) for j in range(md.num_columns)}
+
+
+@pytest.mark.smoke
 def test_compaction_preserves_content(spark, tmp_path):
     """SURVEY §7 hard-part 5: small files accumulate per merge; compact()
     must fold them without changing table content. COW merges already
     rewrite affected partitions whole, so genuine accumulation lives in
-    MOR mode: every micro-batch appends a delta file set."""
+    MOR mode: every micro-batch appends a delta file set. Base, delta
+    and compacted files are all zstd; compaction writes each file in
+    key order."""
     table = ParquetLakeTable(
         spark, str(tmp_path / "t_mor"), key_cols=["trans_id"], merge_mode="mor"
     )
@@ -241,9 +256,25 @@ def test_compaction_preserves_content(spark, tmp_path):
         apply_cdc_batch(_envelope_df(spark, fixtures.dml_envelopes()[i : i + 5]), table)
     before_state = _state(table)
     before_files = table.file_count()
-    table.compact(target_files_per_partition=1)
+    assert {r["layer"] for r in table.metadata("files").collect()} == {"base", "delta"}
+    assert all(_codecs(f) == {"ZSTD"} for f in _data_files(table))
+    # uncoalesced, the fold hands compaction several key-hashed runs, so
+    # key order inside each file has to come from the compaction layout
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    prior = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    try:
+        table.compact(target_files_per_partition=1)
+    finally:
+        spark.conf.set(coalesce, prior)
     assert _state(table) == before_state
     assert table.file_count() < before_files
+    compacted = _data_files(table)
+    assert compacted
+    for f in compacted:
+        assert _codecs(f) == {"ZSTD"}, f
+        keys = pq.read_table(f, columns=["trans_id"]).column(0).to_pylist()
+        assert keys == sorted(keys), f
     # table remains mergeable after compaction
     late = fixtures._envelope(fixtures._row(50, amount=5), "insert", seq=999)
     apply_cdc_batch(_envelope_df(spark, [late]), table)

@@ -8,6 +8,9 @@ compiled from the manifest layer (lake/metadata.py, lake/changefeed.py).
 
 from __future__ import annotations
 
+import os
+
+import pyarrow.parquet as pq
 import pytest
 
 from transactional_datalake_using_apache_iceberg_on_aws_glue_spark.cdc import fixtures
@@ -49,11 +52,19 @@ def test_snapshots_table(spark, tmp_path):
     assert snaps[1]["committed_at"] <= snaps[2]["committed_at"]
 
 
+@pytest.mark.smoke
 def test_files_and_partitions_tables(spark, tmp_path):
     table = _two_wave_table(spark, tmp_path)
     files = table.metadata("files").collect()
     assert len(files) == table.file_count()
     assert all(r["size_bytes"] > 0 and r["layer"] == "base" for r in files)
+    # every COW-written data file is zstd-compressed parquet
+    for r in files:
+        md = pq.ParquetFile(
+            os.path.join(table.path, r["dirname"], r["relpath"])).metadata
+        assert {md.row_group(i).column(j).compression
+                for i in range(md.num_row_groups)
+                for j in range(md.num_columns)} == {"ZSTD"}, r["relpath"]
     # harvested column bounds ride along from the manifest stats
     assert any(r["column_bounds"] for r in files)
     parts = {r["partition"]: r for r in table.metadata("partitions").collect()}

@@ -8,7 +8,9 @@ rows — while ``plan_scan`` proves the IO actually shrank.
 from __future__ import annotations
 
 import datetime as dt
+import os
 
+import pyarrow.parquet as pq
 import pytest
 
 #: r14 smoke tier (judge item #1): this file is part of the
@@ -237,6 +239,14 @@ def test_zorder_compact_prunes_non_leading_column(spark, tmp_path):
     zo = _mk(spark, str(tmp_path / "zo"), rows, partition_col=None)
     zo.compact(target_files_per_partition=16, cluster_by=["trans_id", "amount"])
     assert zo._manifest()["summary"]["clustered_by"] == ["trans_id", "amount"]
+    # both compaction layouts write zstd parquet
+    for t in (lin, zo):
+        for r in t.metadata("files").collect():
+            md = pq.ParquetFile(
+                os.path.join(t.path, r["dirname"], r["relpath"])).metadata
+            assert {md.row_group(i).column(j).compression
+                    for i in range(md.num_row_groups)
+                    for j in range(md.num_columns)} == {"ZSTD"}, r["relpath"]
 
     pred = [("amount", ">=", 1000), ("amount", "<=", 1127)]  # 128/4096 values
     p_lin, p_zo = lin.plan_scan(pred), zo.plan_scan(pred)

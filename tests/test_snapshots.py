@@ -10,6 +10,9 @@ implementation in lake/table.py.
 
 from __future__ import annotations
 
+import os
+
+import pyarrow.parquet as pq
 import pytest
 
 from transactional_datalake_using_apache_iceberg_on_aws_glue_spark.cdc import fixtures
@@ -499,6 +502,13 @@ def test_compact_partitions_scoped_rewrite(spark, tmp_path):
     assert m1["base"][untouched] == m0["base"][untouched]  # untouched
     assert m1["summary"]["scoped_to"] == [scoped]
     assert scoped in m1.get("stats", {})
+    for r in table.metadata("files").collect():
+        if r["dirname"] == m1["base"][scoped]:
+            md = pq.ParquetFile(
+                os.path.join(table.path, r["dirname"], r["relpath"])).metadata
+            assert {md.row_group(i).column(j).compression
+                    for i in range(md.num_row_groups)
+                    for j in range(md.num_columns)} == {"ZSTD"}
 
     with pytest.raises(ValueError, match="unknown partitions"):
         table.compact_partitions(["no_such_partition"])

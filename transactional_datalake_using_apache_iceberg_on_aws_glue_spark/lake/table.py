@@ -92,6 +92,8 @@ DELETED_COL = "_deleted"
 LINEAGE_COLS = (OP_TS_COL, TXN_COL, DELETED_COL)
 #: pseudo-partition key used in manifests of unpartitioned tables
 _ALL = "__ALL__"
+#: parquet codec of every table data file (see ``_write_files``)
+_PARQUET_CODEC = "zstd"
 
 #: physical-schema cache for immutable slice directories, keyed
 #: (table path, dirname) -> (partition col the dir was written under,
@@ -977,9 +979,17 @@ class ParquetLakeTable:
 
     def _write_files(self, df: DataFrame, dirname: str) -> list[str]:
         """Write ``df`` into a fresh immutable snapshot/delta directory;
-        return the partition values present (dir-name encoded)."""
+        return the partition values present (dir-name encoded).
+
+        Every table data file comes through here and is zstd-compressed
+        parquet — Iceberg's default codec since 1.4
+        (``write.parquet.compression-codec``); the reference's Iceberg
+        0.14 wrote gzip. zstd gives gzip's size at snappy's write speed,
+        about two thirds of Spark's default snappy bytes on CDC rows.
+        Readers take any codec, so snappy files from older commits stay
+        readable beside zstd ones."""
         dest = os.path.join(self.path, dirname)
-        w = df.write.mode("overwrite")
+        w = df.write.mode("overwrite").option("compression", _PARQUET_CODEC)
         if self.partition_col:
             w = w.partitionBy(self.partition_col)
         w.parquet(dest)
@@ -1880,10 +1890,8 @@ class ParquetLakeTable:
                 self.partition_col,
                 bounds=self._stats_bounds(cluster_by),
             )
-        elif self.partition_col:
-            rewritten = df.repartition(target_files_per_partition, self.partition_col)
         else:
-            rewritten = df.coalesce(target_files_per_partition)
+            rewritten = self._compaction_layout(df, target_files_per_partition)
         snap = self._next_dirname("snap")
         written = self._write_files(rewritten, snap)
         self._commit(
@@ -1892,6 +1900,18 @@ class ParquetLakeTable:
                      "clustered_by": cluster_by or []},
             stats=self._collect_key_stats(snap, written),
         )
+
+    def _compaction_layout(self, df: DataFrame, n: int) -> DataFrame:
+        """Non-clustered compaction layout: ``n`` tasks hashed on the
+        partition column (``n`` coalesced files when unpartitioned),
+        rows in key order inside each file. The repartition scatters
+        keys; sorting them back gives runs that zstd packs tighter.
+        Merge and delta writes are left as they come: they leave the
+        resolver grouped by key, and a sort there saves no bytes."""
+        if self.partition_col:
+            return (df.repartition(n, self.partition_col)
+                    .sortWithinPartitions(self.partition_col, *self.key_cols))
+        return df.coalesce(n).sortWithinPartitions(*self.key_cols)
 
     # -- table statistics (ANALYZE / Puffin parity) ---------------------------
 
@@ -2708,9 +2728,7 @@ class ParquetLakeTable:
                 bounds=self._stats_bounds(cluster_by, scope=scope),
             )
         else:
-            rewritten = df.repartition(
-                target_files_per_partition, self.partition_col
-            )
+            rewritten = self._compaction_layout(df, target_files_per_partition)
         snap = self._next_dirname("snap")
         written = self._write_files(rewritten, snap)
         if set(written) - scope:
