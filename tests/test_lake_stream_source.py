@@ -38,7 +38,6 @@ def _drain(spark, table_path, ckpt, collected):
         spark.readStream.format("lake-changes")
         .option("path", table_path)
         .option("keys", "trans_id")
-        .option("partitionCol", "event")
         .load()
     )
 
@@ -219,8 +218,7 @@ def test_stream_survives_column_rename(spark, tmp_path):
         register_lake_stream(spark)
         q = (
             spark.readStream.format("lake-changes")
-            .option("path", table.path).option("keys", "trans_id")
-            .option("partitionCol", "event").load()
+            .option("path", table.path).option("keys", "trans_id").load()
             .writeStream.foreachBatch(
                 lambda df, bid: got.extend(
                     (r["trans_id"], r["_change_type"], r["cents"])
@@ -275,8 +273,7 @@ def test_stream_types_non_string_partition_column(spark, tmp_path):
     rows: list = []
     q = (
         spark.readStream.format("lake-changes")
-        .option("path", table.path).option("keys", "id")
-        .option("partitionCol", "bucket").load()
+        .option("path", table.path).option("keys", "id").load()
         .writeStream.foreachBatch(
             lambda d, b: rows.extend(d.collect()))
         .option("checkpointLocation", str(tmp_path / "ck_np"))
@@ -458,7 +455,6 @@ def test_stream_move_check_limit_zero_falls_back(spark, tmp_path):
         register_lake_stream(spark)
         q = (spark.readStream.format("lake-changes")
              .option("path", table.path).option("keys", "trans_id")
-             .option("partitionCol", "event")
              .option("moveCheckLimit", "0").load()
              .writeStream.foreachBatch(
                  lambda df, b: got.extend(
@@ -516,7 +512,6 @@ def test_stream_move_cap_forced_is_loud_and_converges(spark, tmp_path):
         register_lake_stream(spark)
         q = (spark.readStream.format("lake-changes")
              .option("path", table.path).option("keys", "trans_id")
-             .option("partitionCol", "event")
              .option("moveCheckLimit", str(limit)).load()
              .writeStream.foreachBatch(
                  lambda df, b: batches.append(
@@ -615,8 +610,7 @@ def test_stream_schema_evolution_soak(spark, tmp_path):
     def drain():
         register_lake_stream(spark)
         q = (spark.readStream.format("lake-changes")
-             .option("path", table.path).option("keys", "trans_id")
-             .option("partitionCol", "event").load()
+             .option("path", table.path).option("keys", "trans_id").load()
              .writeStream.foreachBatch(
                  lambda df, b: got.extend(r.asDict() for r in df.collect()))
              .option("checkpointLocation", str(tmp_path / "ck_se"))
@@ -749,7 +743,6 @@ def test_stream_move_cap_degraded_still_emits_cross_partition_delete(
         register_lake_stream(spark)
         q = (spark.readStream.format("lake-changes")
              .option("path", table.path).option("keys", "trans_id")
-             .option("partitionCol", "event")
              .option("moveCheckLimit", "1").load()
              .writeStream.foreachBatch(
                  lambda df, b: batches.append(
@@ -830,7 +823,6 @@ def test_stream_arrow_emission_equals_row_emission(spark, tmp_path):
         got: list = []
         q = (spark.readStream.format("lake-changes")
              .option("path", table.path).option("keys", "trans_id")
-             .option("partitionCol", "event")
              .option("includePreimages", "true")
              .option("arrowEmit", "true" if arrow else "false")
              .load()

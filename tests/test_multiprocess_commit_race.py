@@ -410,8 +410,7 @@ def test_live_stream_reads_through_cross_process_race(spark, tmp_path, seed):
     def drain():
         register_lake_stream(spark)
         q = (spark.readStream.format("lake-changes")
-             .option("path", table_path).option("keys", "trans_id")
-             .option("partitionCol", "event").load()
+             .option("path", table_path).option("keys", "trans_id").load()
              .writeStream.foreachBatch(
                  lambda df, b: batches.append(
                      [(r["trans_id"], r["_change_type"], r["event"],

@@ -318,17 +318,17 @@ def test_delta_dir_pruning_on_key_predicates(spark, tmp_path):
 
 
 def test_harvest_tiers_agree(spark, tmp_path):
-    """The three harvest_stats execution tiers (serial driver <=8,
-    threaded driver <=DRIVER_HARVEST_CAP, executor RDD) must produce
-    byte-identical manifests for the same file set — the tier is picked
-    by file count alone and must never change the stats (r13 opt:
-    the threaded tier replaced a per-commit Spark job whose fixed
-    overhead was ~70x the footer work at merge-sized snapshots)."""
+    """The two harvest_stats execution tiers (threaded driver
+    <=DRIVER_HARVEST_CAP, executor RDD) must produce byte-identical
+    manifests for the same file set — the tier is picked by file count
+    alone and must never change the stats (r13 opt: the threaded tier
+    replaced a per-commit Spark job whose fixed overhead was ~70x the
+    footer work at merge-sized snapshots)."""
     from transactional_datalake_using_apache_iceberg_on_aws_glue_spark.lake import (
         scan as scan_mod,
     )
 
-    # 12 files across 3 partitions: above the serial tier, below the cap
+    # 12 files across 3 partitions: below the cap
     df = spark.range(0, 1200).selectExpr(
         "id as trans_id", "concat('e', id % 3) as event",
         "cast(id % 97 as int) as amount",
@@ -345,18 +345,6 @@ def test_harvest_tiers_agree(spark, tmp_path):
     try:
         scan_mod.DRIVER_HARVEST_CAP = 8  # force the executor RDD tier
         via_rdd = scan_mod.harvest_stats(spark, files, dest, "event=", "__ALL__")
-        scan_mod.DRIVER_HARVEST_CAP = 10 ** 9
-        serial_files = files[:6]
-        threaded_sub = scan_mod.harvest_stats(
-            spark, serial_files, dest, "event=", "__ALL__")
     finally:
         scan_mod.DRIVER_HARVEST_CAP = cap
     assert threaded == via_rdd
-    # the <=8 serial tier agrees with the others on a subset too
-    scan_mod.DRIVER_HARVEST_CAP = 8
-    try:
-        sub_rdd_free = scan_mod.harvest_stats(
-            spark, serial_files, dest, "event=", "__ALL__")
-    finally:
-        scan_mod.DRIVER_HARVEST_CAP = cap
-    assert threaded_sub == sub_rdd_free

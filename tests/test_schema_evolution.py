@@ -120,6 +120,21 @@ def test_evolution_guards(spark, tmp_path):
         table.drop_column("_deleted")
 
 
+def test_publish_after_branch_rename_reads_renamed_column(spark, tmp_path):
+    """A branch that renames a column publishes its rename history with
+    its files: main reads the pre-rename files under the new name."""
+    table = _two_wave_table(spark, tmp_path)
+    table.create_branch("audit")
+    br = table.branch("audit")
+    br.rename_column("amount", "amount_cents")
+    table.publish_branch("audit")
+    assert table._manifest()["renames"] == [
+        {"from": "amount", "to": "amount_cents"}]
+    got = {r["trans_id"]: r["amount_cents"] for r in
+           table.read_data().select("trans_id", "amount_cents").collect()}
+    assert got == fixtures.expected_final_state()
+
+
 def test_rename_in_mor_mode_folds_deltas(spark, tmp_path):
     table = _two_wave_table(spark, tmp_path, merge_mode="mor")
     table.rename_column("amount", "cents")

@@ -72,14 +72,26 @@ def test_time_travel_by_timestamp(spark, tmp_path):
         table.read(as_of_timestamp_ms=t1 - 10_000)
 
 
-def test_rollback_is_metadata_only_and_history_grows(spark, tmp_path):
-    table = _two_wave_table(spark, tmp_path)
+def _assert_snapshot_metadata_complete(table):
+    """Every outstanding delta keeps its file list and row stats, and
+    the summary counts the snapshot's records."""
+    m = table._manifest()
+    assert set(m["delta_files"]) == set(m["deltas"])
+    assert set(m["delta_stats"]) == set(m["deltas"])
+    assert "total-records" in m["summary"]
+    assert table.file_count() == table.metadata("files").count()
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_rollback_is_metadata_only_and_history_grows(spark, tmp_path, mode):
+    table = _two_wave_table(spark, tmp_path, merge_mode=mode)
     files_before = table.file_count()
     table.rollback(1)
     assert table.current_version() == 3  # rollback is a new commit
     assert _state(table) == {k: 10 + k for k in fixtures.INSERT_KEYS}
     ops = [h["operation"] for h in table.history()]
-    assert ops == ["create", "merge", "rollback"]
+    assert ops == ["create", {"cow": "merge", "mor": "merge-mor"}[mode],
+                   "rollback"]
     # no data movement: the rolled-back state references the v1 files
     assert table.file_count() <= files_before
     # table continues forward from the rolled-back state
@@ -87,6 +99,13 @@ def test_rollback_is_metadata_only_and_history_grows(spark, tmp_path):
     apply_cdc_batch(_envelope_df(spark, [late]), table)
     assert _state(table)[60] == 6
     assert 37 not in _state(table)  # dml wave stays rolled back
+    # a rollback across a compaction takes the target's per-delta
+    # metadata with its delta list (MOR: the late row's delta)
+    want = _state(table)
+    table.compact()
+    table.rollback(4)
+    assert _state(table) == want
+    _assert_snapshot_metadata_complete(table)
 
 
 def test_expire_snapshots_frees_unreferenced_files(spark, tmp_path):
@@ -110,7 +129,7 @@ def test_commit_conflict_detected(spark, tmp_path):
     table = _two_wave_table(spark, tmp_path)
     stale_version = table.current_version() - 1  # writer planned on v1
     with pytest.raises(CommitConflictError):
-        table._commit(stale_version, "merge", {}, [], table.read().schema)
+        table._commit(stale_version, "merge", base={}, deltas=[])
 
 
 def test_read_changes_between_snapshots(spark, tmp_path):
@@ -257,7 +276,7 @@ def test_commit_claim_is_exclusive(spark, tmp_path):
     # another writer claimed v+1 but has not swapped CURRENT yet
     assert table.fs.create_exclusive(table._manifest_file(v + 1), "{}")
     with pytest.raises(CommitConflictError):
-        table._commit(v, "merge", {}, [], table.read().schema)
+        table._commit(v, "merge", base={}, deltas=[])
 
 
 def test_read_changes_across_schema_evolution(spark, tmp_path):
@@ -337,12 +356,14 @@ def test_merge_probe_broadcast_is_size_gated(spark, tmp_path):
 # -- branches & tags: write-audit-publish --------------------------------------
 
 
-def test_wap_branch_write_audit_publish(spark, tmp_path):
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_wap_branch_write_audit_publish(spark, tmp_path, mode):
     """The full WAP cycle: fork, merge onto the branch (main untouched),
     audit the branch, publish to main, branch ref gone. Publish is a
     serialized metadata-only commit on main (not a bare pointer swap),
-    so it claims a fresh version past the branch's v3."""
-    table = _two_wave_table(spark, tmp_path)
+    so it claims a fresh version past the branch's v3, carrying the
+    branch head's per-delta metadata with its files."""
+    table = _two_wave_table(spark, tmp_path, merge_mode=mode)
     main_before = _state(table)
     table.create_branch("audit")
     br = table.branch("audit")
@@ -366,6 +387,7 @@ def test_wap_branch_write_audit_publish(spark, tmp_path):
     assert [h["version"] for h in hist] == [1, 2, 4]
     assert hist[-1]["operation"] == "publish"
     assert hist[-1]["summary"]["published_branch"] == "audit"
+    _assert_snapshot_metadata_complete(table)
 
 
 def test_wap_branch_diverged_publish_refused(spark, tmp_path):
@@ -569,13 +591,12 @@ def test_concurrent_commit_race_single_winner(spark, tmp_path):
     table = _two_wave_table(spark, tmp_path)
     base = table.current_version()
     m = table._manifest()
-    schema = table.read().schema
     results = {}
 
     def commit(tag):
         try:
-            table._commit(base, "merge", m["base"], [], schema,
-                          summary={"writer": tag})
+            table._commit(base, "merge", summary={"writer": tag},
+                          base=m["base"], deltas=[])
             results[tag] = "ok"
         except CommitConflictError:
             results[tag] = "conflict"

@@ -258,7 +258,6 @@ def test_change_stream_across_spec_boundary(spark, tmp_path):
         spark.readStream.format("lake-changes")
         .option("path", t.path)
         .option("keys", "trans_id")
-        .option("partitionCol", "device")
         .load()
         .writeStream.format("parquet")
         .option("path", out_dir)
@@ -293,6 +292,28 @@ def test_rollback_across_evolve_restores_spec(spark, tmp_path):
     assert set(_state(t)) == {1, 2, 3, 4}
     t.merge(_batch(spark, _rows([11], "like", "pc")))
     assert "like" in t._manifest()["base"]  # event layout again
+
+
+@pytest.mark.smoke
+def test_publish_across_branch_evolve_carries_spec(spark, tmp_path):
+    """Publishing a branch that evolved its partition spec hands main
+    the branch head's spec and per-slice specs with its files, so main
+    reads every slice in the layout it was written under, and main's
+    next write uses the published spec."""
+    t = _table(spark, tmp_path)
+    t.create_branch("audit")
+    br = t.branch("audit")
+    br.evolve_partition_spec(partition_col="device")
+    br.merge(_batch(spark, _rows([10], "view", "tablet")))
+    want, branch_head = _state(br), br._manifest()
+    t.publish_branch("audit")
+    m = t._manifest()
+    assert m["spec"]["partition_col"] == "device"
+    assert m["slice_specs"] == branch_head["slice_specs"]
+    assert _state(t) == want
+    t.merge(_batch(spark, _rows([11], "like", "pc")))
+    assert t.partition_col == "device"
+    assert set(_state(t)) == {1, 2, 3, 4, 10, 11}
 
 
 def test_concurrent_merges_with_retry_soak(spark, tmp_path):

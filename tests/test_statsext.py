@@ -138,8 +138,7 @@ def test_stream_and_changes_read_externalized_manifests(spark, tmp_path):
     def drain():
         register_lake_stream(spark)
         q = (spark.readStream.format("lake-changes")
-             .option("path", t.path).option("keys", "trans_id")
-             .option("partitionCol", "event").load()
+             .option("path", t.path).option("keys", "trans_id").load()
              .writeStream.foreachBatch(
                  lambda df, b: got.extend(
                      (r["trans_id"], r["_change_type"], r["amount"])

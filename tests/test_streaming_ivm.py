@@ -69,7 +69,6 @@ def test_stream_include_preimages_matches_read_changes(spark, tmp_path):
     def drain():
         q = (spark.readStream.format("lake-changes")
              .option("path", t.path).option("keys", "trans_id")
-             .option("partitionCol", "event")
              .option("includePreimages", "true")
              .load()
              .writeStream.foreachBatch(

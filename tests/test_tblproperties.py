@@ -64,24 +64,36 @@ def test_set_unset_properties_commits(spark, tmp_path):
     assert t.read_data(as_of_version=1).count() == 2
 
 
-def test_legacy_manifest_synthesizes_and_migrates(spark, tmp_path):
-    """Pre-r12 manifests have no properties map: properties() falls
-    back to handle intrinsics, and the first SET persists them."""
-    t = _mk(spark, tmp_path / "t")
-    # simulate a legacy manifest: strip the map from the stored JSON
+def test_manifest_without_format_version_is_refused(spark, tmp_path):
+    """Every commit writes ``format_version`` 1, and every reader
+    refuses a manifest without it (ManifestFormatError): the table,
+    its properties, its metadata tables and the change stream's
+    planner. No reader guesses at keys an older manifest lacks."""
     import json
 
-    mf = t._manifest_file(1)
+    from transactional_datalake_using_apache_iceberg_on_aws_glue_spark.fsutil import (
+        ManifestFormatError,
+    )
+    from transactional_datalake_using_apache_iceberg_on_aws_glue_spark.sources import (
+        register_lake_stream,
+    )
+
+    t = _mk(spark, tmp_path / "t")
+    t.set_properties({"comment": "x"})
+    assert [m["format_version"] for m in t._iter_manifests()] == [1, 1]
+    mf = t._manifest_file(2)
     doc = json.loads(t.fs.read_text(mf))
-    doc.pop("properties", None)
+    doc.pop("format_version")
     t.fs.remove(mf)
     assert t.fs.create_exclusive(mf, json.dumps(doc))
     t._manifest_cache.clear()
-    assert t.properties() == {"key_cols": "k", "merge_mode": "cow"}
-    t.set_properties({"comment": "migrated"})
-    m2 = t._manifest()
-    assert m2["properties"] == {
-        "key_cols": "k", "merge_mode": "cow", "comment": "migrated"}
+    for read in (t.read_data, t.properties, lambda: t.metadata("files")):
+        with pytest.raises(ManifestFormatError, match="format_version"):
+            read()
+    register_lake_stream(spark)
+    with pytest.raises(Exception, match="ManifestFormatError"):
+        (spark.readStream.format("lake-changes").option("path", t.path)
+         .option("keys", "k").load())
 
 
 def test_sql_tblproperties_roundtrip(spark, tmp_path):

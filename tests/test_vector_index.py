@@ -354,32 +354,31 @@ def test_rebuild_swaps_generation_and_vacuum_reclaims(spark, corpus,
     assert fresh.ivf_topk(q, k=5, n_probe=16).count() == 5
 
 
-def test_legacy_flat_layout_still_reads(spark, corpus, tmp_path):
-    """Pre-r12 indexes have data/ + centroids/ directly under the root
-    and a meta.json without a 'gen' key — they must keep probing."""
+def test_meta_without_generation_is_refused(spark, corpus, tmp_path):
+    """``build`` writes every meta key (geometry plus the ``gen``
+    pointer); a meta lacking one — the flat pre-generation layout —
+    raises ManifestFormatError instead of probing a guessed layout."""
     import json
-    import os
-    import shutil
+
+    from transactional_datalake_using_apache_iceberg_on_aws_glue_spark.fsutil import (
+        ManifestFormatError,
+    )
 
     emb, q = corpus
     src = VectorIndex(spark, str(tmp_path / "src"), planes=8, n_cells=16)
     src.build(emb)
-    legacy_root = tmp_path / "legacy"
-    os.makedirs(legacy_root)
-    gen_dir = tmp_path / "src" / src._gen_rel()
-    shutil.copytree(gen_dir / "data", legacy_root / "data")
-    shutil.copytree(gen_dir / "centroids", legacy_root / "centroids")
-    with open(legacy_root / "meta.json", "w") as fh:
-        json.dump({"planes": 8, "n_cells": 16,
-                   "vec_col": "embedding", "id_col": "vec_id"}, fh)
+    meta_path = tmp_path / "src" / "meta.json"
+    meta = json.loads(meta_path.read_text())
+    assert meta["gen"] == src._gen_rel()
+    del meta["gen"]
+    meta_path.write_text(json.dumps(meta))
 
-    legacy = VectorIndex(spark, str(legacy_root), planes=8, n_cells=16)
-    assert legacy.exists()
-    got = [(r["vec_id"], round(r["sim"], 6))
-           for r in legacy.lsh_topk(q, k=10, hamming_radius=1).collect()]
-    want = [(r["vec_id"], round(r["sim"], 6))
-            for r in src.lsh_topk(q, k=10, hamming_radius=1).collect()]
-    assert got == want and got
+    stale = VectorIndex(spark, str(tmp_path / "src"), planes=8, n_cells=16)
+    assert stale.exists()
+    with pytest.raises(ManifestFormatError, match="gen"):
+        stale.lsh_topk(q, k=10, hamming_radius=1)
+    with pytest.raises(ManifestFormatError, match="gen"):
+        stale.vacuum()
 
 
 def test_compact_restores_one_file_per_partition(spark, corpus, tmp_path):

@@ -25,11 +25,20 @@ Hadoop-compatible filesystem, so ``s3://...`` passes through
 untouched; only the ``subtree:`` test form needs unwrapping to the
 underlying local directory (a production object-store path never
 takes that branch).
+
+The manifest format gate lives here for the same reason: the table,
+its metadata tables and the stream source's planner and tasks all
+parse version manifests through :func:`parse_manifest`.
 """
 
 from __future__ import annotations
 
+import json
 import posixpath
+
+#: on-disk manifest format every commit writes as ``format_version``;
+#: a change to the manifest's keys or their meaning bumps it
+MANIFEST_FORMAT_VERSION = 1
 
 _SUBTREE = "subtree:"
 
@@ -46,6 +55,25 @@ def fs_and_root(path: str):
     if "://" in path:
         return pafs.FileSystem.from_uri(path)
     return pafs.LocalFileSystem(), path
+
+
+class ManifestFormatError(ValueError):
+    """Metadata this engine cannot read: a version manifest without
+    ``format_version`` or with an unknown one, or an index meta that
+    lacks a key ``VectorIndex.build`` writes."""
+
+
+def parse_manifest(text: str, where: str) -> dict:
+    """One version manifest's JSON, accepted only at
+    :data:`MANIFEST_FORMAT_VERSION` — every reader relies on the keys
+    that format guarantees instead of defaulting absent ones."""
+    m = json.loads(text)
+    found = m.get("format_version")
+    if found != MANIFEST_FORMAT_VERSION:
+        raise ManifestFormatError(
+            f"manifest {where} has format_version {found!r}; this engine "
+            f"reads format_version {MANIFEST_FORMAT_VERSION} only")
+    return m
 
 
 def spark_url(path: str) -> str:

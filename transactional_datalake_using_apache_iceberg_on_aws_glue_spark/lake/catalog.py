@@ -175,7 +175,7 @@ def view_select_sql(table, as_of_version: int | None = None,
         phys_schema = table.spark.read.parquet(root).schema
         phys = set(phys_schema.names)
         phys_types = {f.name: f.dataType for f in phys_schema.fields}
-        renames = m.get("renames", [])
+        renames = m["renames"]
 
         def field_sql(f):
             src = resolve_physical_name(f.name, phys, renames)

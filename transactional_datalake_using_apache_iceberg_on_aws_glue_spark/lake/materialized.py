@@ -387,7 +387,7 @@ class MaterializedRollup:
             from pyspark.sql.types import StructType
 
             names = set(StructType.fromJson(m["schema"]).fieldNames())
-            renames = m.get("renames") or []
+            renames = m["renames"]
             toks: set = set()
             for e in self.agg_exprs.values():
                 toks |= set(re.findall(r"[A-Za-z_][A-Za-z0-9_]*", e))
@@ -421,7 +421,8 @@ class MaterializedRollup:
         closure of the r9 judge finding (a renamed maintained column
         killed the streaming query; the polling path broke the same
         way, just later)."""
-        renames = (self.source._manifest() or {}).get("renames") or []
+        m = self.source._manifest()
+        renames = m["renames"] if m is not None else []
         out = {}
         for c in self._source_cols():
             name = c

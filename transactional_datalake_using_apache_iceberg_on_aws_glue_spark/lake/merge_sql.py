@@ -1757,12 +1757,8 @@ class MergeSqlRunner:
         TBLPROPERTIES (advisor r12: a mismatched statement silently
         misconfigured the handle — wrong merge keys corrupt the next
         MERGE). Statement properties that EXPLICITLY conflict with the
-        recorded config error; statements that omit them adopt it.
-        Pre-r12 manifests record no properties — the statement's
-        config stands, as before."""
-        persisted = (table._manifest() or {}).get("properties")
-        if not persisted:
-            return table
+        recorded config error; statements that omit them adopt it."""
+        persisted = table._manifest()["properties"]
         p_keys = [k.strip() for k in
                   persisted.get("key_cols", "").split(",") if k.strip()]
         p_mode = persisted.get("merge_mode", "cow")
@@ -2029,12 +2025,8 @@ class MergeSqlRunner:
         if spec is not None:
             ddl += f" PARTITIONED BY ({spec})"
         # persisted map (r12) — user properties round-trip through the
-        # emitted DDL; legacy tables fall back to handle intrinsics
-        try:
-            props = table.properties()
-        except ValueError:
-            props = {"key_cols": ",".join(table.key_cols),
-                     "merge_mode": table.merge_mode}
+        # emitted DDL
+        props = table.properties()
         ddl += " TBLPROPERTIES (" + ", ".join(
             f"'{k}'='{v}'" for k, v in sorted(props.items())) + ")"
         from pyspark.sql import types as T
@@ -2091,11 +2083,9 @@ class MergeSqlRunner:
                      ("Provider", "lake", None),
                      ("Key Columns", ",".join(table.key_cols), None),
                      ("Merge Mode", table.merge_mode, None),
-                     ("Current Version",
-                      "" if mf is None else str(mf["version"]), None)]
+                     ("Current Version", str(mf["version"]), None)]
             user_props = {
-                k: v for k, v in ((mf or {}).get("properties")
-                                  or {}).items()
+                k: v for k, v in mf["properties"].items()
                 if k not in ("key_cols", "merge_mode")}
             if user_props:  # Spark's [k=v, ...] spelling
                 rows.append(("Table Properties", "[" + ", ".join(

@@ -58,10 +58,9 @@ def snapshots_df(table: "ParquetLakeTable") -> DataFrame:
     rows = []
     for m in table._iter_manifests():
         rows.append((
-            m["version"], m.get("parent", m["version"] - 1),
-            m.get("ref", "main"),
+            m["version"], m["parent"], m["ref"],
             _ms_to_dt(m["committed_at_ms"]), m["operation"],
-            json.dumps(m.get("summary", {}), sort_keys=True),
+            json.dumps(m["summary"], sort_keys=True),
             len(m["base"]), len(m["deltas"]),
             m["version"] in lineage,
         ))
@@ -88,16 +87,8 @@ def _delta_footer_stats(table: "ParquetLakeTable", m: dict) -> dict:
         cache = table._delta_footer_cache = {}
     missing = [d for d in m["deltas"] if d not in cache]
     if missing:
-        delta_files = m.get("delta_files") or {}
-        paths = []
-        for d in missing:
-            root = os.path.join(table.path, d)
-            listed = delta_files.get(d)
-            if listed:
-                paths.extend(os.path.join(root, rel)
-                             for rels in listed.values() for rel in rels)
-            else:  # pre-r5 manifest: one recursive listing
-                paths.extend(table.fs.walk_files(root, ".parquet"))
+        paths = [os.path.join(table.path, d, rel) for d in missing
+                 for rels in m["delta_files"][d].values() for rel in rels]
         # one combined job; tokens are re-derived driver-side from the
         # relpath so mixed-spec deltas each use their OWN slice column
         h = harvest_stats(table.spark, sorted(paths), table.path, None, _ALL)
@@ -131,21 +122,22 @@ def _file_rows(table: "ParquetLakeTable", m: dict) -> list[tuple]:
     is authoritative, sizes/rows rode along from the write job, so no
     directory is walked and no file is stat'ed on the read path (r6 —
     the r5 version walked + stat'ed every referenced file driver-side;
-    at millions of files that IS the metadata query). Pre-stats
-    manifests fall back to one walk per slice."""
+    at millions of files that IS the metadata query). A partition
+    whose statsext sidecar is gone (the benign GC race
+    ``_externalize_stats`` documents) falls back to one walk of its
+    slice."""
     rows: list[tuple] = []
-    stats = m.get("stats", {})
     for part_value, snap in sorted(m["base"].items()):
         # r8: file-level detail may live in a content-addressed
         # sidecar (_externalize_stats); inflate per partition
-        entry = table._resolved_entry(stats.get(part_value)) or {}
+        entry = table._resolved_entry(m["stats"][part_value])
         fstats = entry.get("files") or {}
         frows = entry.get("file_rows") or {}
         fsizes = entry.get("file_sizes") or {}
         if fstats:
             for rel in sorted(fstats):
                 size = fsizes.get(rel)
-                if size is None:  # pre-r6 manifest: one stat per file
+                if size is None:  # harvest could not size it: stat it
                     size = table.fs.size(os.path.join(table.path, snap, rel))
                 rows.append((
                     part_value, "base", snap, rel, size, frows.get(rel),
@@ -167,17 +159,10 @@ def _file_rows(table: "ParquetLakeTable", m: dict) -> list[tuple]:
             ))
     if m["deltas"]:
         harvested = _delta_footer_stats(table, m)
-        delta_files = m.get("delta_files") or {}
         for delta in m["deltas"]:
             per_file = harvested.get(delta) or {}
-            listed = delta_files.get(delta)
-            if listed is not None:
-                rels = sorted(r for rl in listed.values() for r in rl)
-            else:  # pre-r5 manifest: one walk
-                base = os.path.join(table.path, delta)
-                rels = [os.path.relpath(f, base).replace("\\", "/")
-                        for f in table.fs.walk_files(base, ".parquet")]
-            for rel in rels:
+            for rel in sorted(r for rl in m["delta_files"][delta].values()
+                              for r in rl):
                 tok, bounds, nrows, nbytes = per_file.get(rel) or (
                     _part_of(rel, "", table._slice_spec(m, delta)[0]),
                     None, None, None)
@@ -220,7 +205,7 @@ def partitions_df(table: "ParquetLakeTable",
     m = table._manifest(version)
     if m is None:
         return table.spark.createDataFrame([], PARTITIONS_SCHEMA)
-    stats = m.get("stats") or {}
+    stats = m["stats"]
     n_deltas = len(m["deltas"])
     agg: dict[str, list] = {}  # part -> [n_files, bytes, n_dfiles, n_drows]
     for part, layer, _dir, _rel, size, nrows, _b in _file_rows(table, m):
@@ -263,7 +248,7 @@ def history_df(table: "ParquetLakeTable") -> DataFrame:
     for m in table._iter_manifests():
         rows.append((
             _ms_to_dt(m["committed_at_ms"]), m["version"],
-            m.get("parent", m["version"] - 1), m["operation"],
+            m["parent"], m["operation"],
             m["version"] in lineage,
         ))
     return table.spark.createDataFrame(rows, HISTORY_SCHEMA)

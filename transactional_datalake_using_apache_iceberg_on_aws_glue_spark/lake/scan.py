@@ -36,18 +36,14 @@ the assembled DataFrame — stats only shrink IO, never decide rows.
 from __future__ import annotations
 
 import datetime as _dt
-import os as _os_env
 from typing import Iterable
 
 #: largest snapshot (file count) whose footer harvest runs on the
 #: DRIVER instead of as a Spark job. Footers are ~KB of metadata each,
-#: so up to this constant the in-process read (threaded past 8 files)
-#: is two orders of magnitude cheaper than the RDD fan-out's fixed job
-#: overhead; beyond it the executor path keeps driver IO bounded.
-#: Tunable per deployment (object stores with slow metadata reads may
-#: want it lower; fast local disks higher).
-DRIVER_HARVEST_CAP = int(_os_env.environ.get(
-    "SPARK_GRAFT_HARVEST_DRIVER_CAP", "64"))
+#: so up to this constant the in-process threaded read is two orders
+#: of magnitude cheaper than the RDD fan-out's fixed job overhead;
+#: beyond it the executor path keeps driver IO bounded.
+DRIVER_HARVEST_CAP = 64
 
 #: stats-manifest shape, per encoded partition value:
 #:   {"cols": {col: [lo, hi]},              # partition-level bounds
@@ -132,26 +128,17 @@ def harvest_stats(spark, files: list[str], root: str,
             bounds = {}
         return (part, fp[prefix_len:], bounds, nrows, nbytes)
 
-    if len(files) <= 8:
-        # bounded driver fast path (r13 opt): a handful of footers is
-        # pure metadata (~KBs each) — reading them in-process skips a
-        # whole Spark job per COMMIT, which at small-batch merge rates
-        # (the rollup-maintenance tail, streaming micro-batches) was a
-        # measurable fixed cost. The executor fan-out below remains the
-        # path for real snapshots (the r1 rule — no unbounded per-file
-        # driver IO on the commit path — still holds: 8 footers is a
-        # constant, not O(snapshot)).
-        rows = [one_file(fp) for fp in sorted(files)]
-    elif len(files) <= DRIVER_HARVEST_CAP:
-        # bounded THREADED driver tier (r13 opt, second pass): measured
-        # at sf0.1 the COW merge writes 30-48 files (window-resolve
-        # tasks x partitions) and the RDD fan-out costs 0.4-0.7 s of
-        # pure job overhead against ~6 ms of actual footer reads — a
-        # ~70x overhead ratio that recurs on EVERY merge commit. Up to
-        # the cap the footers are read in-process on a small thread
-        # pool (pyarrow releases the GIL; the pool bounds wall-clock on
-        # high-latency object stores where serial round trips would
-        # stack). The cap is a CONSTANT (env-tunable), so the r1 rule
+    if len(files) <= DRIVER_HARVEST_CAP:
+        # bounded THREADED driver tier (r13 opt): measured at sf0.1 the
+        # COW merge writes 30-48 files (window-resolve tasks x
+        # partitions) and the RDD fan-out costs 0.4-0.7 s of pure job
+        # overhead against ~6 ms of actual footer reads — a ~70x
+        # overhead ratio that recurs on EVERY merge commit, and a
+        # whole Spark job per commit at small-batch merge rates too.
+        # Up to the cap the footers are read in-process on a small
+        # thread pool (pyarrow releases the GIL; the pool bounds
+        # wall-clock on high-latency object stores where serial round
+        # trips would stack). The cap is a CONSTANT, so the r1 rule
         # still holds: driver IO on the commit path stays O(1), and
         # real large snapshots keep the executor fan-out.
         from concurrent.futures import ThreadPoolExecutor

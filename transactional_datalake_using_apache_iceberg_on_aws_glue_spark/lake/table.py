@@ -71,6 +71,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..constants import OP_COL, OP_TS_COL, TXN_COL
+from ..fsutil import MANIFEST_FORMAT_VERSION, ManifestFormatError, parse_manifest
 from .fsio import LocalFileSystem
 from .resolve import is_folded, resolve_latest
 from .scan import (
@@ -94,6 +95,11 @@ LINEAGE_COLS = (OP_TS_COL, TXN_COL, DELETED_COL)
 _ALL = "__ALL__"
 #: parquet codec of every table data file (see ``_write_files``)
 _PARQUET_CODEC = "zstd"
+#: manifest keys that describe one snapshot's file sets; a commit
+#: takes each from its arguments or from one source manifest
+#: (``ParquetLakeTable._commit``)
+_SNAPSHOT_KEYS = ("base", "deltas", "schema", "stats", "renames", "spec",
+                  "slice_specs", "delta_stats", "delta_files", "table_stats")
 
 #: physical-schema cache for immutable slice directories, keyed
 #: (table path, dirname) -> (partition col the dir was written under,
@@ -621,20 +627,18 @@ class ParquetLakeTable:
         return max(vs, default=0)
 
     def _ancestors(self, head: int) -> set[int]:
-        """Versions reachable from ``head`` via parent pointers.
-        Manifests from before branching carried no ``parent`` field —
-        they default to version-1 (history was linear then)."""
+        """Versions reachable from ``head`` via parent pointers."""
         out: set[int] = set()
         v = head
         while v > 0 and v not in out:
             out.add(v)
             try:
                 m = self._manifest(v)
+            except ManifestFormatError:
+                raise
             except ValueError:  # expired ancestor: stop the walk
                 break
-            if m is None:
-                break
-            v = m.get("parent", m["version"] - 1)
+            v = m["parent"]
         return out
 
     def _manifest(self, version: int | None = None) -> dict | None:
@@ -659,7 +663,7 @@ class ParquetLakeTable:
                 return hit
             self._manifest_cache.pop(v, None)  # expired under us
         try:
-            m = json.loads(self.fs.read_text(mf))
+            m = parse_manifest(self.fs.read_text(mf), mf)
         except FileNotFoundError:
             if version is None:
                 return None
@@ -728,7 +732,8 @@ class ParquetLakeTable:
             return
         for name in sorted(self.fs.listdir(vdir)):
             if name.startswith("v") and name.endswith(".json"):
-                yield json.loads(self.fs.read_text(os.path.join(vdir, name)))
+                mf = os.path.join(vdir, name)
+                yield parse_manifest(self.fs.read_text(mf), mf)
 
     def _sync_spec(self) -> None:
         """Adopt the CURRENT manifest's partition spec as this handle's
@@ -737,25 +742,19 @@ class ParquetLakeTable:
         ``evolve_partition_spec`` commit writes under the table's real
         current spec, not its constructor's."""
         m = self._manifest()
-        if m is not None and m.get("spec") is not None:
+        if m is not None:
             self.partition_col, self.partition_transform = _spec_load(m["spec"])
 
     def _manifest_spec(self, m: dict) -> tuple[str | None, Transform | None]:
-        """The partition spec a manifest's own commits write under
-        (pre-spec-evolution manifests default to the handle's spec)."""
-        if m.get("spec") is not None:
-            return _spec_load(m["spec"])
-        return self.partition_col, self.partition_transform
+        """The partition spec a manifest's own commits write under."""
+        return _spec_load(m["spec"])
 
     def _slice_spec(self, m: dict, dirname: str) -> tuple[str | None, Transform | None]:
         """The partition spec ``dirname`` (a snap-/delta- dir referenced
         by manifest ``m``) was WRITTEN under — its directory layout.
         Slices absent from ``slice_specs`` carry the manifest's own
         spec."""
-        entry = (m.get("slice_specs") or {}).get(dirname)
-        if entry is not None:
-            return _spec_load(entry)
-        return self._manifest_spec(m)
+        return _spec_load(m["slice_specs"].get(dirname, m["spec"]))
 
     def metadata(self, kind: str, version: int | None = None) -> DataFrame:
         """Iceberg-style metadata table as a DataFrame: ``kind`` in
@@ -778,21 +777,15 @@ class ParquetLakeTable:
                 "version": m["version"],
                 "committed_at_ms": m["committed_at_ms"],
                 "operation": m["operation"],
-                "summary": m.get("summary", {}),
+                "summary": m["summary"],
             }
             for m in self._iter_manifests()
             if m["version"] in lineage
         ]
 
-    def _commit(self, base_version: int, operation: str, base: dict,
-                deltas: list, schema: T.StructType,
-                summary: dict | None = None, stats: dict | None = None,
-                renames: list | None = None, spec: dict | None = None,
-                slice_specs: dict | None = None,
-                delta_stats: dict | None = None,
-                delta_files: dict | None = None,
-                table_stats: dict | None = None,
-                properties: dict | None = None) -> int:
+    def _commit(self, base_version: int, operation: str,
+                summary: dict | None = None, source: dict | None = None,
+                **keys) -> int:
         """Publish a new version. The EXCLUSIVE CREATE of the version
         manifest is the atomic claim (O_CREAT|O_EXCL locally,
         conditional PUT on an object store): two racing writers both
@@ -808,107 +801,67 @@ class ParquetLakeTable:
         create picks exactly one winner, as before branches existed. A
         number claimed by a DIFFERENT ref is not a conflict: skip past
         it (Iceberg snapshot-id style) and contest the next free one,
-        re-checking the ref pointer before every attempt."""
+        re-checking the ref pointer before every attempt.
+
+        Carry rule: each snapshot key (:data:`_SNAPSHOT_KEYS` — the
+        file sets and everything that describes them) comes from
+        ``keys`` or, when not passed, from ONE source manifest: the ref
+        head at ``base_version`` unless ``source`` names another (the
+        rollback target, the published branch head). So a commit never
+        pairs one snapshot's files with another snapshot's schema,
+        renames, spec or delta metadata, and a metadata-only commit
+        passes just the keys it changes. ``properties`` is table-level
+        (Iceberg keeps it out of snapshots): ``keys`` or the ref head.
+        The table's first commit passes base, deltas, schema, stats and
+        properties; its other keys start empty. ``slice_specs``,
+        ``delta_stats`` and ``delta_files`` keep only the dirs the new
+        snapshot references. Every manifest records
+        ``format_version`` (:data:`MANIFEST_FORMAT_VERSION`)."""
+        bad = set(keys) - {*_SNAPSHOT_KEYS, "properties"}
+        if bad:
+            raise TypeError(f"unknown manifest keys {sorted(bad)}")
         vdir = self._versions_path()
         self.fs.makedirs(vdir)
-        prev = self._manifest(base_version) if base_version > 0 else None
-        if renames is None:
-            # carry the rename history forward (every data commit keeps
-            # reading pre-rename files correctly); rename_column and
-            # rollback/publish pass their own list explicitly
-            renames = list(prev.get("renames", [])) if prev else []
-        if spec is None:
-            # carry the TABLE's current spec forward, not the handle's:
-            # a metadata-only commit (add/rename/widen/drop column,
-            # compute_stats) from a handle constructed with
-            # pre-evolution partition arguments must not silently
-            # revert the partition spec — absent slice_specs entries
-            # mean "current spec", so a reverted spec re-labels every
-            # new-layout snapshot dir with the wrong partition column
-            # (advisor finding r4). Data write paths _sync_spec()
-            # first, making handle spec == prev spec there, so this is
-            # a pure widening of correctness.
-            if prev is not None and prev.get("spec") is not None:
-                spec = prev["spec"]
-            else:
-                spec = _spec_dict(self.partition_col, self.partition_transform)
-        if slice_specs is None:
-            # carry forward: still-referenced dirs keep their recorded
-            # spec; dirs written by THIS commit take the current spec
-            # (absent entry == current). evolve_partition_spec passes
-            # its own full map.
-            slice_specs = dict((prev or {}).get("slice_specs") or {})
+        head = self._manifest(base_version) if base_version > 0 else None
+        src = source or head or {
+            "renames": [], "slice_specs": {}, "delta_stats": {},
+            "delta_files": {}, "table_stats": None,
+            "spec": _spec_dict(self.partition_col, self.partition_transform),
+        }
+        if "schema" in keys:
+            keys["schema"] = keys["schema"].jsonValue()
+        snap = {k: keys[k] if k in keys else src[k] for k in _SNAPSHOT_KEYS}
+        base, deltas = snap["base"], snap["deltas"]
         referenced = set(base.values()) | set(deltas)
-        slice_specs = {d: s for d, s in slice_specs.items()
-                       if d in referenced and s != spec}
-        if delta_stats is None:
-            # carry per-delta key stats for dirs still outstanding
-            delta_stats = dict((prev or {}).get("delta_stats") or {})
-        delta_stats = {d: s for d, s in delta_stats.items() if d in deltas}
-        if delta_files is None:
-            # carry per-delta file lists (token -> relpaths) the same way
-            delta_files = dict((prev or {}).get("delta_files") or {})
-        delta_files = {d: s for d, s in delta_files.items() if d in deltas}
-        if table_stats is None:
-            # table-level NDV stats (compute_stats) ride along until
-            # recomputed — consumers see computed_at_version staleness
-            table_stats = (prev or {}).get("table_stats")
-        if properties is None:
-            # table properties (r12): set once at create / by
-            # set_properties commits, carried forward verbatim by
-            # every other commit (pre-r12 manifests carry None and
-            # properties() synthesizes intrinsics from the handle)
-            properties = (prev or {}).get("properties")
+        snap["slice_specs"] = {d: s for d, s in snap["slice_specs"].items()
+                               if d in referenced and s != snap["spec"]}
+        for k in ("delta_stats", "delta_files"):
+            snap[k] = {d: v for d, v in snap[k].items() if d in deltas}
         # Iceberg-style record accounting in the commit summary (r6):
-        # total-records across base footer counts + outstanding delta
-        # observations, set only when every referenced entry carries a
-        # count (dashboards read it from the snapshots table; never
-        # guessed, never a job)
+        # base footer counts + outstanding delta observations, both in
+        # the manifest (dashboards read it from the snapshots table;
+        # never a job). An empty delta's stats entry is {}: zero rows.
         summary = dict(summary or {})
-        if "total-records" not in summary:
-            total = 0
-            for tok in base:
-                r = ((stats or {}).get(tok) or {}).get("rows")
-                if r is None:
-                    total = None
-                    break
-                total += r
-            if total is not None:
-                for d in deltas:
-                    entry = delta_stats.get(d)
-                    rs = ([sub.get("rows") for sub in entry.values()]
-                          if entry else [None])
-                    if entry == {}:
-                        continue  # r6 empty delta: zero rows
-                    if not entry or any(r is None for r in rs):
-                        total = None
-                        break
-                    total += sum(rs)
-            if total is not None:
-                summary["total-records"] = total
-        # externalize large file-level stats AFTER the summary fold
-        # (which only reads the inline "rows" scalar): entries already
-        # in pointer form — the carry-forward of untouched partitions —
+        summary["total-records"] = (
+            sum(snap["stats"][t]["rows"] for t in base)
+            + sum(sub["rows"] for d in deltas
+                  for sub in snap["delta_stats"][d].values()))
+        # externalize large file-level stats: entries already in
+        # pointer form — the carry-forward of untouched partitions —
         # re-emit their ~60-byte pointer verbatim, so the manifest
         # rewrite stays O(partitions + changed files), never O(files)
+        snap["stats"] = _externalize_stats(self.fs, vdir, snap["stats"],
+                                           self.stats_ext_threshold)
         manifest = {
+            "format_version": MANIFEST_FORMAT_VERSION,
             "parent": base_version,
             "ref": self.ref,
             "committed_at_ms": int(time.time() * 1000),
             "operation": operation,
-            "base": base,
-            "deltas": deltas,
-            "schema": schema.jsonValue(),
             "summary": summary,
-            "stats": _externalize_stats(self.fs, vdir, stats or {},
-                                        self.stats_ext_threshold),
-            "renames": renames,
-            "spec": spec,
-            "slice_specs": slice_specs,
-            "delta_stats": delta_stats,
-            "delta_files": delta_files,
-            "table_stats": table_stats,
-            "properties": properties,
+            **snap,
+            "properties": (keys["properties"] if "properties" in keys
+                           else head["properties"]),
         }
         new_v = base_version + 1
         while True:
@@ -1132,7 +1085,7 @@ class ParquetLakeTable:
         partitions — the snapshot-diff pruning hook
         (``_span_changed_partitions``)."""
         schema = T.StructType.fromJson(manifest["schema"])
-        renames = manifest.get("renames", [])
+        renames = manifest["renames"]
         _, cur_t = self._manifest_spec(manifest)
         derive = cur_t if cur_t is not None else None
         base_map: dict = manifest["base"]
@@ -1179,25 +1132,12 @@ class ParquetLakeTable:
         return resolve_latest([base_df, *deltas], self.key_cols,
                               strategy=strategy)
 
-    def _delta_row_total(self, m: dict) -> int | None:
+    def _delta_row_total(self, m: dict) -> int:
         """Total rows across outstanding delta dirs from the manifest's
         delta stats (the MOR write's Observation row count, r6) — pure
-        metadata, no job. None = unknown (a delta predates row
-        recording); an empty stats entry counts zero, which is only a
-        perf misjudgment on pre-r6 manifests, never a correctness one
-        (the gate picks between two equivalent folds)."""
-        d_stats = m.get("delta_stats") or {}
-        total = 0
-        for d in m["deltas"]:
-            entry = d_stats.get(d)
-            if entry is None:
-                return None
-            for sub in entry.values():
-                r = sub.get("rows")
-                if r is None:
-                    return None
-                total += r
-        return total
+        metadata, no job. An empty delta's entry is {}: zero rows."""
+        return sum(sub["rows"] for d in m["deltas"]
+                   for sub in m["delta_stats"][d].values())
 
     # -- catalog -----------------------------------------------------------
 
@@ -1337,7 +1277,7 @@ class ParquetLakeTable:
             pred_cache[key] = (part_eq, part_proj, stat_preds)
             return pred_cache[key]
 
-        stats = m.get("stats", {})
+        stats = m["stats"]
         base: dict = {}
         slice_cols: dict = {}
         files_total = files_kept = 0
@@ -1377,9 +1317,8 @@ class ParquetLakeTable:
                 if enc is not None:
                     key_preds.append((col, op, enc))
         kept_deltas = []
-        d_stats = m.get("delta_stats") or {}
         for d in m["deltas"]:
-            entries = d_stats.get(d)
+            entries = m["delta_stats"][d]
             if key_preds and entries:
                 if not any(prune_entry(e, key_preds)[0]
                            for e in entries.values()):
@@ -1393,7 +1332,7 @@ class ParquetLakeTable:
             "deltas": kept_deltas,
             "deltas_total": len(m["deltas"]),
             "schema": m["schema"],
-            "renames": m.get("renames", []),
+            "renames": m["renames"],
             "slice_cols": slice_cols,
             "spec": _spec_dict(cur_pcol, cur_ptrans),
             "parts_total": len(m["base"]),
@@ -1411,8 +1350,8 @@ class ParquetLakeTable:
         construction — property-tested in tests/test_scan_planning.py."""
         plan = self.plan_scan(filters, as_of_version, as_of_timestamp_ms)
         schema = T.StructType.fromJson(plan["schema"])
-        renames = plan.get("renames", [])
-        slice_cols = plan.get("slice_cols", {})
+        renames = plan["renames"]
+        slice_cols = plan["slice_cols"]
         _, cur_t = _spec_load(plan["spec"])
         by_snap: dict[str, list[str]] = {}
         file_slices: list[tuple[str, list[str]]] = []
@@ -1424,7 +1363,7 @@ class ParquetLakeTable:
         parts = [
             self._read_snapshot_slice(
                 snap, values, schema, renames,
-                partition_col=slice_cols.get(snap, self.partition_col),
+                partition_col=slice_cols[snap],
                 derive=cur_t)
             for snap, values in sorted(by_snap.items())
         ] + [
@@ -1433,7 +1372,7 @@ class ParquetLakeTable:
         ]
         deltas = []
         for d in plan["deltas"]:
-            d_col = slice_cols.get(d, self.partition_col)
+            d_col = slice_cols[d]
             deltas.append(self._read_snapshot_slice(
                 d, self._list_partition_dirs(
                     os.path.join(self.path, d), d_col),
@@ -1554,13 +1493,9 @@ class ParquetLakeTable:
         scans the table and one that scans the churned partitions."""
         if m_old is None or m_new is None:
             return None
-        if m_old.get("schema") != m_new.get("schema"):
+        if any(m_old[k] != m_new[k] for k in ("schema", "renames", "spec")):
             return None
-        if (m_old.get("renames") or []) != (m_new.get("renames") or []):
-            return None
-        if m_old.get("spec") != m_new.get("spec"):
-            return None
-        if (m_old.get("slice_specs") or {}) or (m_new.get("slice_specs") or {}):
+        if m_old["slice_specs"] or m_new["slice_specs"]:
             return None
         bo, bn = m_old["base"], m_new["base"]
         changed = {p for p in set(bo) | set(bn) if bo.get(p) != bn.get(p)}
@@ -1627,9 +1562,8 @@ class ParquetLakeTable:
         (always treated as overlapping). Raises OSError/
         FileNotFoundError when a delta dir cannot be listed."""
         out: dict = {}
-        stats = m.get("stats") or {}
         for tok in m["base"]:
-            cols = (stats.get(tok) or {}).get("cols") or {}
+            cols = m["stats"][tok]["cols"]
             b: dict | str = {}
             for k in self.key_cols:
                 if k not in cols:
@@ -1637,13 +1571,11 @@ class ParquetLakeTable:
                     break
                 b[k] = list(cols[k])
             out[tok] = b
-        d_stats = m.get("delta_stats") or {}
         d_col, _ = self._manifest_spec(m)
         for d in m["deltas"]:
             toks = self._list_partition_dirs(os.path.join(self.path, d),
                                              d_col)
-            dcols = ((d_stats.get(d) or {}).get(_ALL) or {}).get(
-                "cols") or {}
+            dcols = m["delta_stats"][d].get(_ALL, {}).get("cols", {})
             for tok in toks:
                 cur = out.get(tok, {})
                 if cur == "unknown":
@@ -1730,7 +1662,7 @@ class ParquetLakeTable:
         # the union below would diff it as drop+add, flagging every
         # unchanged row update_postimage with ghost columns
         m_to = self._resolve_as_of(to_version, None)
-        renames = (m_to or {}).get("renames") or []
+        renames = m_to["renames"]
         if renames:
             old_cols = set(old.columns)
             for c in new.columns:
@@ -1802,10 +1734,9 @@ class ParquetLakeTable:
                  "merge_mode": self.merge_mode}
         props.update(self.extra_properties)
         self._commit(
-            base_v, "create", {v: snap for v in written}, [], data.schema,
-            summary={"partitions": len(written)},
-            stats=self._collect_key_stats(snap, written),
-            properties=props,
+            base_v, "create", summary={"partitions": len(written)},
+            base={v: snap for v in written}, deltas=[], schema=data.schema,
+            stats=self._collect_key_stats(snap, written), properties=props,
         )
 
     def hidden_partition_cols(self) -> list[str]:
@@ -1895,9 +1826,10 @@ class ParquetLakeTable:
         snap = self._next_dirname("snap")
         written = self._write_files(rewritten, snap)
         self._commit(
-            base_v, "compact", {v: snap for v in written}, [], df.schema,
+            base_v, "compact",
             summary={"purged_tombstones": purge_tombstones,
                      "clustered_by": cluster_by or []},
+            base={v: snap for v in written}, deltas=[], schema=df.schema,
             stats=self._collect_key_stats(snap, written),
         )
 
@@ -1953,19 +1885,15 @@ class ParquetLakeTable:
                 for c in columns
             },
         }
-        self._commit(
-            m["version"], "analyze", m["base"], m["deltas"],
-            T.StructType.fromJson(m["schema"]),
-            summary={"analyzed_columns": columns},
-            stats=m.get("stats", {}), table_stats=stats,
-        )
+        self._commit(m["version"], "analyze",
+                     summary={"analyzed_columns": columns}, table_stats=stats)
         return stats
 
     def table_stats(self) -> dict | None:
         """The most recent ``compute_stats`` result carried by the
         current manifest (None when never analyzed). Pure metadata."""
         m = self._manifest()
-        return None if m is None else m.get("table_stats")
+        return None if m is None else m["table_stats"]
 
     # -- table properties (r12: SHOW/ALTER TBLPROPERTIES parity) ---------
 
@@ -1974,18 +1902,11 @@ class ParquetLakeTable:
         properties): user keys set at create / by
         :meth:`set_properties`, plus the engine-owned intrinsics
         (``key_cols``, ``merge_mode``) recorded at create time.
-        Pre-r12 manifests carry no map — intrinsics synthesize from
-        THIS handle's config, and the first ``set_properties`` commit
-        persists them. Raises when the table has never committed."""
+        Raises when the table has never committed."""
         m = self._manifest()
         if m is None:
             raise ValueError("table has no committed versions")
-        props = m.get("properties")
-        if props is None:
-            props = {"key_cols": ",".join(self.key_cols),
-                     "merge_mode": self.merge_mode}
-            props.update(self.extra_properties)
-        return dict(props)
+        return dict(m["properties"])
 
     def set_properties(self, props: dict) -> int:
         """``ALTER TABLE ... SET TBLPROPERTIES`` — merge ``props`` into
@@ -2003,12 +1924,8 @@ class ParquetLakeTable:
             raise ValueError("table has no committed versions")
         merged = self.properties()
         merged.update({k: str(v) for k, v in props.items()})
-        return self._commit(
-            m["version"], "set-properties", m["base"], m["deltas"],
-            T.StructType.fromJson(m["schema"]),
-            summary={"set": sorted(props)},
-            stats=m.get("stats", {}), properties=merged,
-        )
+        return self._commit(m["version"], "set-properties",
+                            summary={"set": sorted(props)}, properties=merged)
 
     def unset_properties(self, keys: Sequence[str],
                          if_exists: bool = False) -> int:
@@ -2032,12 +1949,8 @@ class ParquetLakeTable:
                 f" {missing} (use IF EXISTS to ignore)")
         for k in keys:
             merged.pop(k, None)
-        return self._commit(
-            m["version"], "unset-properties", m["base"], m["deltas"],
-            T.StructType.fromJson(m["schema"]),
-            summary={"unset": sorted(keys)},
-            stats=m.get("stats", {}), properties=merged,
-        )
+        return self._commit(m["version"], "unset-properties",
+                            summary={"unset": sorted(keys)}, properties=merged)
 
     def rewrite_manifests(self) -> dict:
         """Iceberg ``CALL system.rewrite_manifests`` parity, applied to
@@ -2053,19 +1966,16 @@ class ParquetLakeTable:
         m = self._manifest()
         if m is None:
             raise ValueError("table has no committed versions")
-        before = m.get("stats") or {}
+        before = m["stats"]
         inline = [p for p, e in before.items()
                   if e and e.get("files") and "files_ext" not in e]
         if not inline:
             return {"externalized_entries": 0, "version": m["version"]}
         slimmed = _externalize_stats(self.fs, self._versions_path(),
                                      before, 0)
-        v = self._commit(
-            m["version"], "rewrite-manifests", m["base"], m["deltas"],
-            T.StructType.fromJson(m["schema"]),
-            summary={"externalized_entries": len(inline)},
-            stats=slimmed,
-        )
+        v = self._commit(m["version"], "rewrite-manifests",
+                         summary={"externalized_entries": len(inline)},
+                         stats=slimmed)
         return {"externalized_entries": len(inline), "version": v}
 
     # -- partition-spec evolution -------------------------------------------
@@ -2165,12 +2075,11 @@ class ParquetLakeTable:
             d: _spec_dict(*self._slice_spec(m, d)) for d in referenced
         }
         v = self._commit(
-            m["version"], "evolve-spec", m["base"], m["deltas"], new_schema,
+            m["version"], "evolve-spec",
             summary={"from": _spec_dict(self.partition_col,
                                         self.partition_transform),
                      "to": new_spec},
-            stats=m.get("stats", {}),
-            spec=new_spec, slice_specs=slice_specs,
+            schema=new_schema, spec=new_spec, slice_specs=slice_specs,
         )
         self.partition_col, self.partition_transform = new_c, new_t
         return v
@@ -2211,7 +2120,7 @@ class ParquetLakeTable:
         resolution chain-walk). Old files still carry these names
         physically, so a re-introduced logical column of the same name
         would resolve to stale bytes (r3 advisor finding)."""
-        return {r["from"] for r in m.get("renames", [])}
+        return {r["from"] for r in m["renames"]}
 
     @staticmethod
     def _dotted_dtype(dtype, path: str, allow_array: bool = True):
@@ -2293,11 +2202,9 @@ class ParquetLakeTable:
             )
         field = T.StructType.fromDDL(f"{name} {dtype}").fields[0]
         new_schema = T.StructType(list(schema.fields) + [field])
-        return self._commit(
-            m["version"], "add-column", m["base"], m["deltas"], new_schema,
-            summary={"added": name, "type": dtype},
-            stats=m.get("stats", {}),
-        )
+        return self._commit(m["version"], "add-column",
+                            summary={"added": name, "type": dtype},
+                            schema=new_schema)
 
     def rename_column(self, old: str, new: str) -> int:
         """Rename a data column — METADATA-ONLY, O(1), no file rewrite
@@ -2340,7 +2247,7 @@ class ParquetLakeTable:
             )
         if any(r["from"].startswith(f"{old}.")
                or (r["to"] or "").startswith(f"{old}.")
-               for r in m.get("renames", [])):
+               for r in m["renames"]):
             raise ValueError(
                 f"{old!r} carries nested rename/drop history; renaming "
                 "the struct now would dangle those dotted entries — "
@@ -2350,12 +2257,11 @@ class ParquetLakeTable:
             T.StructField(new, f.dataType, f.nullable) if f.name == old else f
             for f in schema.fields
         ]
-        renames = list(m.get("renames", [])) + [{"from": old, "to": new}]
-        stats = _rename_stats_col(self._resolved_stats(m.get("stats", {})), old, new)
+        renames = m["renames"] + [{"from": old, "to": new}]
+        stats = _rename_stats_col(self._resolved_stats(m["stats"]), old, new)
         return self._commit(
-            self.current_version(), "rename-column", m["base"], m["deltas"],
-            T.StructType(fields), summary={"renamed": {old: new}},
-            stats=stats, renames=renames,
+            m["version"], "rename-column", summary={"renamed": {old: new}},
+            schema=T.StructType(fields), stats=stats, renames=renames,
         )
 
     def _rename_nested(self, m: dict, schema: T.StructType,
@@ -2386,14 +2292,12 @@ class ParquetLakeTable:
             ])
 
         new_schema = self._rebuild_nested(schema, old, apply)
-        renames = list(m.get("renames", [])) + [
-            {"from": old, "to": new_path}
-        ]
+        renames = m["renames"] + [{"from": old, "to": new_path}]
+        # footer stats are top-level only: they carry unchanged
         return self._commit(
-            self.current_version(), "rename-column", m["base"], m["deltas"],
-            new_schema, summary={"renamed": {old: new_path}},
-            stats=m.get("stats", {}),  # footer stats are top-level only
-            renames=renames,
+            m["version"], "rename-column",
+            summary={"renamed": {old: new_path}},
+            schema=new_schema, renames=renames,
         )
 
     #: legal type promotions (Iceberg's primitive widening rules):
@@ -2469,10 +2373,10 @@ class ParquetLakeTable:
         if "types" not in changed:
             raise ValueError(f"column path {col!r} does not exist")
         old_s, new_s = changed["types"]
+        # bounds stay valid under widening: stats carry unchanged
         return self._commit(
-            self.current_version(), "widen-column", m["base"], m["deltas"],
-            new_schema, summary={"widened": {col: [old_s, new_s]}},
-            stats=m.get("stats", {}),  # bounds stay valid under widening
+            m["version"], "widen-column",
+            summary={"widened": {col: [old_s, new_s]}}, schema=new_schema,
         )
 
     def drop_column(self, col: str) -> int:
@@ -2500,27 +2404,23 @@ class ParquetLakeTable:
                     [f for f in struct.fields if f.name != leaf])
 
             new_schema = self._rebuild_nested(schema, col, apply)
-            renames = list(m.get("renames", [])) + [
-                {"from": col, "to": None}
-            ]
             return self._commit(
-                self.current_version(), "drop-column", m["base"],
-                m["deltas"], new_schema, summary={"dropped": col},
-                stats=m.get("stats", {}), renames=renames,
+                m["version"], "drop-column", summary={"dropped": col},
+                schema=new_schema,
+                renames=m["renames"] + [{"from": col, "to": None}],
             )
         if col not in schema.names:
             raise ValueError(f"column {col!r} does not exist")
         fields = [f for f in schema.fields if f.name != col]
-        stats = _rename_stats_col(self._resolved_stats(m.get("stats", {})), col, None)
+        stats = _rename_stats_col(self._resolved_stats(m["stats"]), col, None)
         # record the drop in the rename history as {"from": col,
         # "to": None} — inert to the resolution chain-walk (no logical
         # name equals None) but it retires the physical name so it can
         # never be re-introduced (see _retired_names)
-        renames = list(m.get("renames", [])) + [{"from": col, "to": None}]
         return self._commit(
-            self.current_version(), "drop-column", m["base"], m["deltas"],
-            T.StructType(fields), summary={"dropped": col}, stats=stats,
-            renames=renames,
+            m["version"], "drop-column", summary={"dropped": col},
+            schema=T.StructType(fields), stats=stats,
+            renames=m["renames"] + [{"from": col, "to": None}],
         )
 
     def maybe_compact(self, max_deltas: int = 8, **compact_kw) -> bool:
@@ -2553,7 +2453,7 @@ class ParquetLakeTable:
         m = self._manifest()
         if m is None or m["deltas"]:
             return None
-        stats = m.get("stats") or {}
+        stats = m["stats"]
         tokens = set(m["base"]) if scope is None else set(scope)
         if not tokens:
             return None
@@ -2625,8 +2525,7 @@ class ParquetLakeTable:
         for part_enc in sorted(m["base"]):
             if _spec_dict(*self._slice_spec(m, m["base"][part_enc])) != cur_spec:
                 continue  # legacy-spec slice: merge/compact migrates it
-            entry = self._resolved_entry(
-                (m.get("stats") or {}).get(part_enc)) or {}
+            entry = self._resolved_entry(m["stats"][part_enc])
             files = entry.get("files") or {}
             if len(files) < min_files:
                 continue
@@ -2741,17 +2640,14 @@ class ParquetLakeTable:
         # a scoped partition that wrote no files (all rows tombstone-
         # filtered upstream) keeps its old mapping — rows must never
         # vanish from a compact
-        new_stats = dict(m.get("stats", {}))
+        new_stats = dict(m["stats"])
         new_stats.update(self._collect_key_stats(snap, written))
         self._commit(
-            base_v, "compact", new_base, [], self._read_schema(m),
+            base_v, "compact",
             summary={"scoped_to": sorted(scope),
                      "clustered_by": cluster_by or []},
-            stats=new_stats,
+            base=new_base, stats=new_stats,
         )
-
-    def _read_schema(self, m: dict) -> T.StructType:
-        return T.StructType.fromJson(m["schema"])
 
     def rollback(self, version: int) -> None:
         """Reset the table to a prior snapshot — O(1), no data movement:
@@ -2761,20 +2657,14 @@ class ParquetLakeTable:
         target = self._manifest(version)
         if target is None:
             raise ValueError(f"version {version} does not exist")
-        # the PARTITION SPEC travels with the schema: a rollback across
-        # an evolve restores the target's spec too — schema and spec
-        # are coupled here (the spec's derived column lives in the
-        # schema), unlike Iceberg where spec ids are table-level
-        t_pcol, t_ptrans = self._manifest_spec(target)
-        self._commit(
-            self.current_version(), "rollback", target["base"], target["deltas"],
-            T.StructType.fromJson(target["schema"]),
-            summary={"rolled_back_to": version},
-            stats=target.get("stats", {}),
-            spec=_spec_dict(t_pcol, t_ptrans),
-            slice_specs=dict(target.get("slice_specs") or {}),
-        )
-        self.partition_col, self.partition_transform = t_pcol, t_ptrans
+        # every snapshot key comes from the target: its files with
+        # their own schema, renames, per-delta metadata and PARTITION
+        # SPEC (schema and spec are coupled here — the spec's derived
+        # column lives in the schema)
+        self._commit(self.current_version(), "rollback",
+                     summary={"rolled_back_to": version}, source=target)
+        self.partition_col, self.partition_transform = self._manifest_spec(
+            target)
 
     # -- branches & tags (write-audit-publish) -------------------------------
 
@@ -2853,10 +2743,9 @@ class ParquetLakeTable:
             )
         main = self if self.ref == "main" else self.for_ref("main")
         published = main._commit(
-            main_head, "publish", head_m["base"], head_m["deltas"],
-            T.StructType.fromJson(head_m["schema"]),
+            main_head, "publish",
             summary={"published_branch": name, "branch_head": head},
-            stats=head_m.get("stats", {}),
+            source=head_m,
         )
         self.fs.remove(self._ref_file(name))
         return published
@@ -2986,7 +2875,7 @@ class ParquetLakeTable:
         if self.fs.isdir(ext_dir):
             referenced_ext = set()
             for m in self._iter_manifests():
-                for entry in (m.get("stats") or {}).values():
+                for entry in m["stats"].values():
                     if entry and "files_ext" in entry:
                         referenced_ext.add(entry["files_ext"])
             for name in self.fs.listdir(ext_dir):
@@ -3005,45 +2894,21 @@ class ParquetLakeTable:
         """Data files referenced by the CURRENT snapshot (not what is on
         disk — expired/unreferenced files don't count).
 
-        MANIFEST-FIRST (r8): every post-stats commit records
-        ``n_files`` (or the full ``files`` map) per partition and the
-        MOR write path records ``delta_files``, so the count is pure
-        metadata — ``exists()`` runs before EVERY merge, and the r7
-        version's per-directory walk made that O(table) filesystem
-        round-trips per batch. Only pre-stats slices (hand-built or
-        legacy manifests) fall back to a directory walk."""
+        MANIFEST-ONLY (r8): every commit records ``n_files`` (slim,
+        externalized entries) or the full ``files`` map per partition,
+        and ``delta_files`` per delta, so the count is pure metadata —
+        ``exists()`` runs before EVERY merge, and the r7 version's
+        per-directory walk made that O(table) filesystem round-trips
+        per batch."""
         m = self._manifest()
         if m is None:
             return 0
         n = 0
-        stats = m.get("stats") or {}
-        seen: set[str] = set()
-        for part_value, snap in m["base"].items():
-            entry = stats.get(part_value)
-            nf = (entry or {}).get("n_files")
-            if nf is None and (entry or {}).get("files") is not None:
-                nf = len(entry["files"])
-            if nf is not None:
-                n += nf
-                continue
-            # each slice's leaf path follows the spec it was WRITTEN
-            # under (partition-spec evolution leaves old layouts)
-            slice_col = self._slice_spec(m, snap)[0]
-            d = (os.path.join(self.path, snap)
-                 if part_value == _ALL or not slice_col
-                 else os.path.join(self.path, snap,
-                                   f"{slice_col}={part_value}"))
-            if d not in seen and self.fs.isdir(d):
-                seen.add(d)
-                n += len(self.fs.walk_files(d, ".parquet"))
-        delta_files = m.get("delta_files") or {}
-        for delta in m["deltas"]:
-            listed = delta_files.get(delta)
-            if listed is not None:
-                n += sum(len(rels) for rels in listed.values())
-            else:
-                n += len(self.fs.walk_files(
-                    os.path.join(self.path, delta), ".parquet"))
+        for part_value in m["base"]:
+            entry = m["stats"][part_value]
+            n += entry["n_files"] if "files_ext" in entry else len(entry["files"])
+        for listed in m["delta_files"].values():
+            n += sum(len(rels) for rels in listed.values())
         return n
 
     # -- merge -------------------------------------------------------------
@@ -3182,19 +3047,17 @@ class ParquetLakeTable:
                                       key_ranges: dict | None = None) -> set:
         """Live partitions (outside the batch's own) whose stored key
         ranges overlap the batch's key range — the only ones the probe
-        semi-join must scan. Partitions without stats are kept
-        (unknown = unprunable).
+        semi-join must scan. A key column without stored bounds keeps
+        the partition (unknown = unprunable).
 
         ``key_ranges``: ``{key_col: (lo, hi)}`` already computed by
         ``_batch_merge_stats`` — passing it makes this jobless; without
         it the batch pays one min/max aggregate here (standalone
         callers only)."""
-        stats = (self._manifest() or {}).get("stats", {})
         others = live_parts - batch_enc
         if not others:
             return set()
-        if not any(p in stats for p in others):
-            return others  # no stats at all — scan everything as before
+        stats = self._manifest()["stats"]
         if key_ranges is None:
             agg = batch.agg(
                 *[F.min(c).alias(f"_lo_{c}") for c in self.key_cols],
@@ -3204,7 +3067,7 @@ class ParquetLakeTable:
                           for c in self.key_cols}
         out = set()
         for p in others:
-            ranges = (stats.get(p) or {}).get("cols", {})
+            ranges = stats[p]["cols"]
             overlap = True
             for c in self.key_cols:
                 if c not in ranges:
@@ -3419,13 +3282,12 @@ class ParquetLakeTable:
             hi = encode_stat_value(row[f"__hi_{c}"])
             if lo is not None and hi is not None:
                 cols[c] = [lo, hi]
-        new_delta_stats = dict(m.get("delta_stats") or {})
         # the observed row count rides along (r6): the metadata tables
         # and the MOR read-side resolver gate read it manifest-only —
         # no job, no footer re-read (the r4 regression stays dead)
-        new_delta_stats[dname] = (
+        new_delta_stats = {**m["delta_stats"], dname: (
             {_ALL: {"cols": cols, "rows": int(row["__n"])}}
-            if row["__n"] else {})
+            if row["__n"] else {})}
         # per-token file list of the committed delta (one recursive
         # metadata listing, no data reads): the native change stream
         # plans per-partition fold tasks from the MANIFEST alone, the
@@ -3440,14 +3302,13 @@ class ParquetLakeTable:
             if pfx and rel.split("/")[0].startswith(pfx):
                 tok = rel.split("/")[0][len(pfx):]
             by_tok.setdefault(tok, []).append(rel)
-        new_delta_files = dict(m.get("delta_files") or {})
-        new_delta_files[dname] = {t: sorted(fl) for t, fl in by_tok.items()}
+        new_delta_files = {**m["delta_files"], dname: {
+            t: sorted(fl) for t, fl in by_tok.items()}}
         self._commit(
-            base_v, "merge-mor", m["base"], m["deltas"] + [dname], schema,
+            base_v, "merge-mor",
             summary={"deltas_outstanding": len(m["deltas"]) + 1},
-            stats=m.get("stats", {}),  # base files unchanged
-            delta_stats=new_delta_stats,
-            delta_files=new_delta_files,
+            deltas=m["deltas"] + [dname], schema=schema,
+            delta_stats=new_delta_stats, delta_files=new_delta_files,
         )
 
     def _mixed_spec_target(self, batch: DataFrame, m: dict,
@@ -3467,7 +3328,7 @@ class ParquetLakeTable:
         without (c) the rewrite would clobber an untouched partition's
         base pointer while its rows also land in the new snapshot."""
         schema = T.StructType.fromJson(m["schema"])
-        renames = m.get("renames", [])
+        renames = m["renames"]
         cur_t = self.partition_transform
         legacy_tokens = {tok: snap for tok, snap in m["base"].items()
                          if snap in legacy_dirs}
@@ -3572,19 +3433,11 @@ class ParquetLakeTable:
     def _stats_row_count(self, m: dict, tokens) -> int | None:
         """Total stored rows across partition ``tokens`` (None = every
         partition) from the manifest's footer row counts — pure
-        metadata, no job. Returns None (unknown) when any relevant
-        entry predates row counting; tokens with no stored slice
-        contribute zero."""
-        stats = m.get("stats") or {}
+        metadata, no job. Tokens with no stored slice contribute
+        zero."""
         toks = set(m["base"]) if tokens is None else (set(tokens)
                                                      & set(m["base"]))
-        total = 0
-        for t in toks:
-            r = (stats.get(t) or {}).get("rows")
-            if r is None:
-                return None
-            total += r
-        return total
+        return sum(m["stats"][t]["rows"] for t in toks)
 
     @classmethod
     def _approx_row_bytes(cls, dtype) -> int:
@@ -3760,7 +3613,7 @@ class ParquetLakeTable:
         # str() compare left stale entries for escaped/NULL values,
         # silently resurrecting pre-merge rows (advisor finding r1).
         new_base = dict(m["base"])
-        new_stats = dict(m.get("stats", {}))
+        new_stats = dict(m["stats"])
         if pop_tokens is not None:
             for tok in pop_tokens:
                 new_base.pop(tok, None)
@@ -3772,7 +3625,6 @@ class ParquetLakeTable:
             new_stats = {}
         new_stats.update(self._collect_key_stats(snap, written))
         self._commit(
-            base_v, "merge", new_base, m["deltas"], merged.schema,
-            summary={"rewritten_partitions": len(written)},
-            stats=new_stats,
+            base_v, "merge", summary={"rewritten_partitions": len(written)},
+            base=new_base, schema=merged.schema, stats=new_stats,
         )

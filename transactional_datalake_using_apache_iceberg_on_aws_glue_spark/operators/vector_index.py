@@ -77,10 +77,17 @@ from itertools import combinations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..fsutil import fs_and_root, spark_url, write_text_atomic
+from ..fsutil import (
+    ManifestFormatError,
+    fs_and_root,
+    spark_url,
+    write_text_atomic,
+)
 from .similarity import cosine_sim_cols, hyperplane_bucket, ivf_assign
 
 _META = "meta.json"
+#: keys ``VectorIndex.build`` writes into the meta; readers need all
+_META_KEYS = ("planes", "n_cells", "lsh_tables", "gen")
 #: dropped into a generation directory when a build/compact starts and
 #: removed right after its pointer swap: vacuum() must be able to tell
 #: an abandoned build from one that simply hasn't committed yet
@@ -109,8 +116,8 @@ class VectorIndex:
     Parameters mirror the query-time tier; ``path`` is the index root:
     ``path/meta.json`` (the generation pointer + parameters),
     ``path/gen-<token>/data`` (partitioned parquet),
-    ``path/gen-<token>/centroids``. Pre-r12 indexes (no ``gen`` key in
-    meta) keep reading from ``path/data`` / ``path/centroids``.
+    ``path/gen-<token>/centroids``. A meta lacking any key ``build``
+    writes (:data:`_META_KEYS`) raises :class:`ManifestFormatError`.
     """
 
     def __init__(self, spark: SparkSession, path: str,
@@ -141,20 +148,29 @@ class VectorIndex:
 
     # -- layout --------------------------------------------------------
 
+    def _read_meta(self) -> dict:
+        """The committed meta, read fresh; every key ``build`` writes
+        must be there."""
+        where = posixpath.join(self._root, _META)
+        with self._fs.open_input_stream(where) as f:
+            meta = json.loads(f.read().decode())
+        missing = [k for k in _META_KEYS if k not in meta]
+        if missing:
+            raise ManifestFormatError(
+                f"index meta {where} lacks {missing}; rebuild the index")
+        return meta
+
     def _load_meta(self) -> dict:
         """Resolve (and pin) the committed generation for this handle."""
         if self._meta is None:
-            with self._fs.open_input_stream(
-                    posixpath.join(self._root, _META)) as f:
-                self._meta = json.loads(f.read().decode())
+            self._meta = self._read_meta()
         return self._meta
 
     def _gen_rel(self) -> str:
-        return self._load_meta().get("gen", "")
+        return self._load_meta()["gen"]
 
     def _rel(self, *parts: str) -> str:
-        gen = self._gen_rel()
-        return posixpath.join(gen, *parts) if gen else posixpath.join(*parts)
+        return posixpath.join(self._gen_rel(), *parts)
 
     @property
     def _data_path(self) -> str:
@@ -173,22 +189,21 @@ class VectorIndex:
 
     # -- persisted geometry ---------------------------------------------
 
-    def _meta_param(self, key: str, fallback: int) -> int:
+    def _meta_param(self, key: str) -> int:
         """Geometry of the PERSISTED index — meta wins over the
         handle's constructor args. A probe opened with different
         ``planes``/``n_cells`` than the index was built with would
         silently compute wrong query buckets / hamming balls and
         return degraded candidates with no error (advisor r12);
         ``build()`` persists every geometry param, so readers follow
-        the layout that actually exists. Falls back to the constructor
-        only for metas that predate the key."""
-        return int(self._load_meta().get(key, fallback))
+        the layout that actually exists."""
+        return int(self._load_meta()[key])
 
     def _meta_planes(self) -> int:
-        return self._meta_param("planes", self.planes)
+        return self._meta_param("planes")
 
     def _meta_n_cells(self) -> int:
-        return self._meta_param("n_cells", self.n_cells)
+        return self._meta_param("n_cells")
 
     def _mark_in_progress(self, gen: str) -> None:
         try:
@@ -361,9 +376,7 @@ class VectorIndex:
         from pyarrow import fs as pafs
 
         try:
-            with self._fs.open_input_stream(
-                    posixpath.join(self._root, _META)) as f:
-                current = json.loads(f.read().decode()).get("gen", "")
+            current = self._read_meta()["gen"]
         except (OSError, FileNotFoundError):
             current = ""  # nothing committed: only abandoned gens go
         removed = []
@@ -402,8 +415,8 @@ class VectorIndex:
     def _meta_lsh_tables(self) -> int:
         """Table count of the PERSISTED index (meta wins over the
         handle's constructor arg — probes must follow the layout that
-        was actually built; pre-r12 metas read as 1)."""
-        return self._meta_param("lsh_tables", 1)
+        was actually built)."""
+        return self._meta_param("lsh_tables")
 
     def _query_bucket(self, query: DataFrame, plane_offset: int = 0) -> int:
         row = query.select(

@@ -5,12 +5,15 @@ Iceberg tables are streamable (``spark.readStream.format("iceberg")``);
 the reference would get that from the runtime jar. This module gives
 the manual engine the same API shape::
 
-    spark.dataSource.register(LakeChangeDataSource)
+    register_lake_stream(spark)
     (spark.readStream.format("lake-changes")
         .option("path", table_root)
         .option("keys", "trans_id")
-        .option("partitionCol", "event")      # omit for unpartitioned
         .load())
+
+The partition layout is not an option: each slice's partition column
+comes from the spec its manifest records, and transform-derived
+columns are hidden from the change rows as ``read_data`` hides them.
 
 ``format("lake-versions")`` streams the offsets alone: one
 ``(from_version, to_version)`` row per micro-batch and no change rows,
@@ -96,8 +99,10 @@ the table path (judge finding r3: the first version re-listed
 directories with ``os.walk``, a local-FS assumption AND a consistency
 hole — files visible on disk but not yet committed). File lists come
 from the manifest itself (per-file stats entries written at commit
-time), so a reader can never see an uncommitted file; a listing
-fallback exists only for manifests written before per-file stats.
+time), so a reader can never see an uncommitted file. The one listing
+left serves a base partition whose externalized stats sidecar is gone
+(the benign GC race ``_externalize_stats`` documents): the committed
+slice directory is listed instead.
 Path forms: a plain path (local), any ``scheme://`` URI pyarrow
 resolves (s3/hdfs/gcs), or ``subtree:<base>!<rel>`` — a chroot-style
 ``SubTreeFileSystem`` wrapper used by tests to prove no OS-path
@@ -152,8 +157,7 @@ def _conv_errors() -> tuple:
 
 def _opt_bool(options: dict, *names: str) -> bool:
     """Case-tolerant boolean option lookup (Spark lowercases data
-    source option keys on some paths and preserves them on others —
-    the partitionCol handling above predates this helper)."""
+    source option keys on some paths and preserves them on others)."""
     for n in names:
         v = options.get(n)
         if v is not None:
@@ -204,10 +208,10 @@ def move_cap_events(path: str) -> list:
 # SparkSession, so this must be self-contained: stdlib + pyarrow only)
 
 
-def _read_text(path: str, *parts: str) -> str:
-    fs, root = _fs_and_root(path)
-    with fs.open_input_stream(posixpath.join(root, *parts)) as f:
-        return f.read().decode()
+_read_text = fsutil.read_text
+#: the one manifest format gate (``format_version``), shared with the
+#: table's own readers
+_parse_manifest = fsutil.parse_manifest
 
 
 class OffsetExpiredError(ValueError):
@@ -223,7 +227,9 @@ class OffsetExpiredError(ValueError):
 
 
 def _read_manifest(path: str, version: int) -> dict:
-    return json.loads(_read_text(path, "_versions", f"v{version:06d}.json"))
+    name = f"v{version:06d}.json"
+    return _parse_manifest(_read_text(path, "_versions", name),
+                           posixpath.join(path, "_versions", name))
 
 
 def _read_offset_manifest(path: str, version: int) -> dict:
@@ -312,7 +318,7 @@ def _lineage_of(path: str, head: int) -> list[int]:
             m = _read_manifest(path, v)
         except (FileNotFoundError, OSError):
             break
-        v = m.get("parent", m["version"] - 1)
+        v = m["parent"]
     return out
 
 
@@ -321,13 +327,13 @@ def _partition_files(path: str, m: dict, part: str,
     """fs-native paths of one partition's parquet files in manifest
     ``m`` — from the manifest's own per-file stats entries (the commit
     wrote them, so the list is exactly the committed file set). Falls
-    back to an fs listing only when a manifest predates per-file
-    stats."""
+    back to an fs listing of the committed slice only when the
+    partition's externalized stats sidecar is gone."""
     snap = m["base"].get(part)
     if snap is None:
         return []
     _fs, root = _fs_and_root(path)
-    entry = _resolve_stats_entry(path, (m.get("stats") or {}).get(part))
+    entry = _resolve_stats_entry(path, m["stats"][part])
     if entry and entry.get("files"):
         return sorted(
             posixpath.join(root, snap, rel) for rel in entry["files"]
@@ -361,9 +367,9 @@ class _PartDiff(InputPartition):
 
     ``fill_col`` is the column the partition token belongs to — the
     SLICE's own partition column, which after a partition-spec
-    evolution may differ from the stream option (old snapshots keep
+    evolution may differ from the current spec's (old snapshots keep
     their original layout; their dir token re-derives their original
-    column, not the current spec's).
+    column). None for an unpartitioned slice.
 
     ``move_new`` / ``move_old`` (r6) are the bounded neighbor
     descriptor lists ``(token, fill_col, layers)`` of OTHER partitions
@@ -392,22 +398,14 @@ class LakeChangeStreamReader(DataSourceStreamReader):
     def __init__(self, options: dict) -> None:
         self.path = options["path"]
         self.keys = [k.strip() for k in options["keys"].split(",")]
-        self.partition_col = options.get("partitioncol") or options.get(
-            "partitionCol")
         self.initial = options.get("initial", "earliest")
-        hidden = options.get("hiddenpartition", "false").lower() == "true"
         #: Iceberg changelog-view shape (r9): emit paired
         #: ``update_preimage`` rows alongside every update — what a
         #: signed-delta consumer needs to SUBTRACT the old image
         #: without re-reading the table
         self.include_preimages = _opt_bool(options, "includepreimages",
                                            "includePreimages")
-        self.columns, self.change_schema = _resolve_schema(
-            self.path, self.partition_col if hidden else None
-        )
-        #: committed delta dirs are immutable — one listing per dir
-        #: ever, only for manifests predating the delta_files entry
-        self._delta_cache: dict[str, dict] = {}
+        self.columns, self.change_schema = _resolve_schema(self.path)
         #: cross-partition move resolution fan-out cap (r6): above this
         #: many neighbor descriptors per batch the stream falls back to
         #: the labeled delete+insert pair (module docstring)
@@ -471,45 +469,20 @@ class LakeChangeStreamReader(DataSourceStreamReader):
         r5 migration hold is gone (judge item r5 "Missing #5")."""
         return _current_version(self.path)
 
-    def _slice_col(self, m: dict, dirname: str | None):
-        """The partition column ``dirname``'s directory layout uses
-        (per-slice spec after a partition-spec evolution; falls back
-        to the stream's partitionCol option for manifests that
-        predate spec recording). ``dirname=None`` resolves the
-        manifest's CURRENT spec."""
-        entry = (m.get("slice_specs") or {}).get(dirname)
-        if entry is not None:
-            return entry.get("partition_col")
-        spec = m.get("spec")
-        if spec is not None:
-            return spec.get("partition_col")
-        return self.partition_col
+    @staticmethod
+    def _slice_col(m: dict, dirname: str):
+        """The partition column ``dirname``'s directory layout uses:
+        its own recorded spec after a partition-spec evolution, else
+        the manifest's current spec."""
+        return m["slice_specs"].get(dirname, m["spec"])["partition_col"]
 
     def _delta_token_files(self, m: dict, d: str) -> dict:
         """{token: [fs-native file paths]} for one committed delta dir
         — from the manifest's ``delta_files`` entry (the commit listed
-        its own output, so no reader-side walk). Manifests written
-        before the entry existed fall back to ONE listing of the dir —
-        sound because a delta dir referenced by a manifest is complete
-        and immutable — cached for the reader's lifetime."""
+        its own output, so no reader-side walk)."""
         _fs, root = _fs_and_root(self.path)
-        entry = (m.get("delta_files") or {}).get(d)
-        if entry is not None:
-            return {tok: [posixpath.join(root, d, rel) for rel in rels]
-                    for tok, rels in entry.items()}
-        if d not in self._delta_cache:
-            dcol = self._slice_col(m, d)
-            pfx = f"{dcol}=" if dcol else None
-            base = posixpath.join(root, d)
-            plen = len(base.rstrip("/")) + 1
-            toks: dict[str, list] = {}
-            for fp in _list_parquet(self.path, base):
-                comp = fp[plen:].split("/")[0]
-                tok = (comp[len(pfx):] if pfx and comp.startswith(pfx)
-                       else _ALL)
-                toks.setdefault(tok, []).append(fp)
-            self._delta_cache[d] = toks
-        return self._delta_cache[d]
+        return {tok: [posixpath.join(root, d, rel) for rel in rels]
+                for tok, rels in m["delta_files"][d].items()}
 
     def _layered(self, m: dict | None) -> dict:
         """{(slice_col, token): [(global_seq, files), ...]} — the
@@ -548,19 +521,18 @@ class LakeChangeStreamReader(DataSourceStreamReader):
         bounds: dict = {}
         snap = m["base"].get(tok)
         if snap is not None and self._slice_col(m, snap) == col:
-            cols = ((m.get("stats") or {}).get(tok) or {}).get("cols") or {}
+            cols = m["stats"][tok]["cols"]
             for k in self.keys:
                 if k not in cols:
                     return None
                 bounds[k] = list(cols[k])
-        d_stats = m.get("delta_stats") or {}
         for d in m["deltas"]:
             if self._slice_col(m, d) != col:
                 continue
             toks = self._delta_token_files(m, d)
             if not toks.get(tok):
                 continue
-            dcols = ((d_stats.get(d) or {}).get(_ALL) or {}).get("cols") or {}
+            dcols = m["delta_stats"][d].get(_ALL, {}).get("cols", {})
             for k in self.keys:
                 if k not in dcols:
                     return None
@@ -597,7 +569,7 @@ class LakeChangeStreamReader(DataSourceStreamReader):
             return [_PartDiff(_ALL, [], [])]  # empty batch
         new_m = self._offset_manifest(hi)
         old_m = None if lo == 0 else self._offset_manifest(lo)
-        renames = new_m.get("renames", [])
+        renames = new_m["renames"]
         old_map = self._layered(old_m)
         new_map = self._layered(new_m)
 
@@ -929,9 +901,7 @@ class LakeChangeStreamReader(DataSourceStreamReader):
             pa_schema = to_arrow_schema(self.change_schema)
             dtypes = {f.name: f.dataType
                       for f in self.change_schema.fields}
-            fill_col = (partition.fill_col
-                        if partition.fill_col is not None
-                        else self.partition_col)
+            fill_col = partition.fill_col
             # schema-level gates, once: these depend on declared
             # types, not file contents — bail before any IO
             for c in self.columns:
@@ -1123,8 +1093,7 @@ class LakeChangeStreamReader(DataSourceStreamReader):
         column-at-a-time."""
         import pandas as pd
 
-        fill_col = (partition.fill_col if partition.fill_col is not None
-                    else self.partition_col)
+        fill_col = partition.fill_col
         dtypes = {f.name: f.dataType for f in self.change_schema.fields}
         part_dtype = dtypes.get(fill_col)
         # own stacks loaded ONCE with tombstone winners + lineage kept:
@@ -1888,7 +1857,7 @@ def _load_state(path: str, layers: list, columns: list, keys: list,
     return out[keep]
 
 
-def _resolve_schema(path: str, hidden_partition_col: str | None = None):
+def _resolve_schema(path: str):
     """(data column names, full stream StructType) from the current
     manifest — lineage columns and hidden transform-derived partition
     columns excluded, ``_change_type`` appended.
@@ -1900,19 +1869,15 @@ def _resolve_schema(path: str, hidden_partition_col: str | None = None):
     derived column leaked into the image comparison). Any spec a
     referenced slice was written under is dropped too, so a
     mid-migration manifest's retired derived columns also stay
-    hidden. ``hidden_partition_col`` remains the explicit override."""
+    hidden."""
     head = _current_version(path)
     if head == 0:
         raise ValueError(f"lake table at {path} has no committed versions")
     m = _read_manifest(path, head)
     struct = T.StructType.fromJson(m["schema"])
     drop = set(LINEAGE)
-    if hidden_partition_col:
-        drop.add(hidden_partition_col)
-    specs = [m.get("spec") or {}] + list(
-        (m.get("slice_specs") or {}).values())
-    for spec in specs:
-        if spec.get("transform") is not None and spec.get("partition_col"):
+    for spec in [m["spec"], *m["slice_specs"].values()]:
+        if spec["transform"] is not None and spec["partition_col"]:
             drop.add(spec["partition_col"])
     fields = [f for f in struct.fields if f.name not in drop]
     columns = [f.name for f in fields]
@@ -1934,12 +1899,7 @@ class LakeChangeDataSource(DataSource):
         return "lake-changes"
 
     def schema(self):
-        hidden = _opt_bool(self.options, "hiddenpartition",
-                           "hiddenPartition")
-        pcol = (self.options.get("partitioncol")
-                or self.options.get("partitionCol"))
-        return _resolve_schema(self.options["path"],
-                               pcol if hidden else None)[1]
+        return _resolve_schema(self.options["path"])[1]
 
     def streamReader(self, schema) -> LakeChangeStreamReader:
         return LakeChangeStreamReader(self.options)
